@@ -56,28 +56,6 @@ object Audit {
     (out, obs)
   }
 
-  /** Distributed per-resource metrics for a transformed frame: one agg pass
-    * (rows + key duplication), schema diff from metadata.
-    */
-  def resourceMetrics(
-      run_id: String,
-      resource: String,
-      rowsIn: Long,
-      transformed: DataFrame,
-      keyCol: String = "business_key",
-      diff: SchemaDiff = SchemaDiff(Nil, Nil)): ResourceRow = {
-    val hasKey = transformed.columns.contains(keyCol)
-    val (rowsOut, dupKeys) =
-      if (hasKey) {
-        val r = transformed.groupBy(col(keyCol)).agg(count(lit(1)).as("c"))
-          .agg(sum(col("c")).as("rows"), sum(when(col("c") > 1, 1).otherwise(0)).as("dups"))
-          .head()
-        (if (r.isNullAt(0)) 0L else r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      } else (transformed.count(), 0L)
-    ResourceRow(run_id, resource, rowsIn, rowsOut, dupKeys,
-      math.max(0L, rowsIn - rowsOut), diff.missing.size, diff.extra.size)
-  }
-
   def appendRun(spark: SparkSession, auditDir: String, row: RunRow): Unit = {
     import spark.implicits._
     Seq(row).toDF().write.mode(SaveMode.Append).parquet(s"$auditDir/etl_runs")

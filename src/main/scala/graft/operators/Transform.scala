@@ -329,30 +329,66 @@ object Transform {
       keys: Seq[String],
       tieBreakers: Seq[String] = Nil,
       latestBy: Option[String] = None,
-      clusterBy: Option[(String, Int)] = None): DataFrame = {
-    val tagged0 = current.withColumn("__src", lit(0))
-      .unionByName(updates.withColumn("__src", lit(1)))
-    // clusterBy = (c, n): the merge's ONE exchange is an explicit
-    // n-partition hash repartition on column c instead of the window's
-    // implicit key exchange, and the window partitions by (c, keys…).
-    // Requires c = f(keys) (e.g. a key-hash bucket column carried by
-    // BOTH sides): then grouping by (c, keys) ≡ grouping by keys, and
-    // HashPartitioning(c) satisfies the window's ClusteredDistribution —
-    // so a caller that must WRITE partitioned by c afterwards (the
-    // bucketed-table merge) gets dedup + merge + write layout from a
-    // single exchange instead of three.
+      clusterBy: Option[(String, Int)] = None): DataFrame =
+    mergeTagged(tagSources(Some(current), Seq(updates)), keys, tieBreakers, latestBy, clusterBy)
+
+  /** [[upsert]] of several update frames in ONE window, equal to folding
+    * [[upsert]] over `updates` in order, starting from `current` (or from
+    * the first update when there is no current table). Each update frame
+    * must already be unique per key (e.g. filtered to rank 1 of
+    * [[dedupRank]]). Per key the newest `latestBy` wins, nulls last; an
+    * exact tie goes to the later update frame and any update beats the
+    * current row, as each step of the fold lets its batch win ties.
+    */
+  def upsertInOrder(
+      current: Option[DataFrame],
+      updates: Seq[DataFrame],
+      keys: Seq[String],
+      tieBreakers: Seq[String] = Nil,
+      latestBy: Option[String] = None): DataFrame = {
+    require(updates.nonEmpty, "upsertInOrder needs at least one update frame")
+    if (current.isEmpty && updates.size == 1) updates.head
+    else mergeTagged(tagSources(current, updates), keys, tieBreakers, latestBy, None)
+  }
+
+  /** `current` (tagged `__src` 0) and each update frame (1, 2, …) in one union. */
+  private def tagSources(current: Option[DataFrame], updates: Seq[DataFrame]): DataFrame =
+    (current.map(_.withColumn("__src", lit(0))).toSeq ++
+      updates.zipWithIndex.map { case (u, i) => u.withColumn("__src", lit(i + 1)) })
+      .reduce(_ unionByName _)
+
+  /** Keep one row per key of a [[tagSources]] union, by [[mergeOrdering]].
+    *
+    * clusterBy = (c, n): the merge's ONE exchange is an explicit
+    * n-partition hash repartition on column c instead of the window's
+    * implicit key exchange, and the window partitions by (c, keys…).
+    * Requires c = f(keys) (e.g. a key-hash bucket column carried by
+    * BOTH sides): then grouping by (c, keys) ≡ grouping by keys, and
+    * HashPartitioning(c) satisfies the window's ClusteredDistribution —
+    * so a caller that must WRITE partitioned by c afterwards (the
+    * bucketed-table merge) gets dedup + merge + write layout from a
+    * single exchange instead of three.
+    */
+  private def mergeTagged(tagged0: DataFrame, keys: Seq[String], tieBreakers: Seq[String],
+      latestBy: Option[String], clusterBy: Option[(String, Int)]): DataFrame = {
     val tagged = clusterBy.map { case (c, n) => tagged0.repartition(n, col(c)) }
       .getOrElse(tagged0)
     val prefix = clusterBy.map(c => col(c._1)).toSeq
-    // With latestBy: the newest row wins regardless of side (stale
-    // re-deliveries cannot regress the target); batch wins exact ties.
-    // Without: updates unconditionally replace current (classic upsert).
-    val ordering = latestBy.map(col(_).desc_nulls_last).toSeq ++
-      Seq(col("__src").desc) ++ tieBreakers.map(col(_).asc)
-    val w = Window.partitionBy(prefix ++ keys.map(col): _*).orderBy(ordering: _*)
+    val w = Window.partitionBy(prefix ++ keys.map(col): _*)
+      .orderBy(mergeOrdering(latestBy, tieBreakers): _*)
     tagged.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
       .drop("__rn", "__src")
   }
+
+  /** The merge window's ordering over rows tagged with their source in
+    * `__src` (0 = current, higher = later update). With latestBy: the
+    * newest row wins regardless of side (stale re-deliveries cannot
+    * regress the target); the later source wins exact ties. Without:
+    * updates unconditionally replace current (classic upsert).
+    */
+  private def mergeOrdering(latestBy: Option[String], tieBreakers: Seq[String]): Seq[Column] =
+    latestBy.map(col(_).desc_nulls_last).toSeq ++
+      Seq(col("__src").desc) ++ tieBreakers.map(col(_).asc)
 
   /** Add the load-timestamp pair to an INITIAL load (both columns =
     * `stamp`) — the insert-default half of the reference's row-stamping
@@ -413,9 +449,8 @@ object Transform {
     val tagged = clusterBy.map { case (c, n) => tagged0.repartition(n, col(c)) }
       .getOrElse(tagged0)
     val prefix = clusterBy.map(c => col(c._1)).toSeq
-    val ordering = latestBy.map(col(_).desc_nulls_last).toSeq ++
-      Seq(col("__src").desc) ++ tieBreakers.map(col(_).asc)
-    val w = Window.partitionBy(prefix ++ keys.map(col): _*).orderBy(ordering: _*)
+    val w = Window.partitionBy(prefix ++ keys.map(col): _*)
+      .orderBy(mergeOrdering(latestBy, tieBreakers): _*)
     val wKey = Window.partitionBy(prefix ++ keys.map(col): _*)
     tagged
       .withColumn("__rn", row_number().over(w))
@@ -476,10 +511,32 @@ object Transform {
     */
   def criticalIssues(df: DataFrame, cc: CriticalCfg): (Seq[String], Seq[Seq[String]]) = {
     if (cc.all.isEmpty && cc.anyOf.isEmpty) return (Nil, Nil)
-    val counts = nonNullCounts(df, cc.all ++ cc.anyOf.flatten)
+    criticalMissing(cc, nonNullCounts(df, criticalColumns(cc)))
+  }
+
+  /** The columns whose non-null counts decide the critical check. */
+  def criticalColumns(cc: CriticalCfg): Seq[String] = (cc.all ++ cc.anyOf.flatten).distinct
+
+  /** The critical verdict over non-null counts (absent columns count 0):
+    * the `all` columns with no value, and the `anyOf` groups with none.
+    */
+  private def criticalMissing(cc: CriticalCfg,
+      counts: Map[String, Long]): (Seq[String], Seq[Seq[String]]) = {
     val missingAll = cc.all.filter(c => counts.getOrElse(c, 0L) == 0L)
     val missingAny = cc.anyOf.filter(g => !g.exists(c => counts.getOrElse(c, 0L) > 0L))
     (missingAll, missingAny)
+  }
+
+  /** Throw [[TransformHardFail]] when the critical check fails under
+    * `promote.onCriticalFail = "error"`. Pure over the counts, so the
+    * eager check in [[pipeline]] and the count Runner observes on its
+    * load action give the same verdict.
+    */
+  def enforceCritical(cfg: DatasetConfig, counts: Map[String, Long]): Unit = {
+    val (missAll, missAny) = criticalMissing(cfg.critical, counts)
+    if (cfg.promote.onCriticalFail == "error" && (missAll.nonEmpty || missAny.nonEmpty))
+      throw new TransformHardFail(
+        s"[${cfg.dataset}] critical failure: missing_all=$missAll missing_any_of=${missAny.size}")
   }
 
   /** Recommended-columns warnings (reference etl/transform.py:256-270
@@ -522,9 +579,39 @@ object Transform {
   // ------------------------------------------------------------------
 
   /** Compose the reference's transform stage 1:1 over one DataFrame.
-    * Throws TransformHardFail per promote_policy, like the reference.
+    * Throws TransformHardFail per promote_policy, like the reference. The
+    * critical check is an eager aggregation; callers that consume the frame
+    * in one later action use [[prepare]] and observe the counts instead.
     */
   def pipeline(df0: DataFrame, cfg: DatasetConfig): DataFrame = {
+    var df = steps(df0, cfg)
+    // The critical check is an eager aggregation over the transformed frame;
+    // persist so the final consumer does not recompute the whole chain
+    // (keys + dedup shuffle) a second time.
+    val needsCheck = cfg.critical.all.nonEmpty || cfg.critical.anyOf.nonEmpty
+    if (needsCheck) df = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    enforceCritical(cfg,
+      if (needsCheck) nonNullCounts(df, criticalColumns(cfg.critical)) else Map.empty)
+    enforceSchema(df, cfg)
+    reorder(df, cfg.order)
+  }
+
+  /** [[pipeline]] without its critical check: no action of its own (only
+    * `dropAllNullCols` and `deriveYear` over an existing year column scan,
+    * when configured) and no persist. The schema-policy checks are
+    * metadata-only and still throw here. The caller owns the critical
+    * check: observe the non-null counts of [[criticalColumns]] on the
+    * returned frame and pass them to [[enforceCritical]] once the
+    * consuming action has run.
+    */
+  def prepare(df0: DataFrame, cfg: DatasetConfig): DataFrame = {
+    val df = steps(df0, cfg)
+    enforceSchema(df, cfg)
+    reorder(df, cfg.order)
+  }
+
+  /** The transform steps shared by [[pipeline]] and [[prepare]]. */
+  private def steps(df0: DataFrame, cfg: DatasetConfig): DataFrame = {
     var df = normalizeColumnNames(df0)
     df = applyRename(df, cfg.rename)
     df = applyNaTokens(df, cfg.normalize.naValues)
@@ -539,24 +626,18 @@ object Transform {
     if (cfg.integrity.enforceUniqueBusinessKey)
       df = dedupByKey(df, Seq("business_key"),
         latestBy = cfg.integrity.latestBy, tieBreakers = cfg.integrity.tieBreakers)
-    val expected = cfg.expectedColumns
-    if (cfg.padMissing) df = padMissing(df, expected)
-    val diff = schemaDiff(df, expected)
-    // The critical check is an eager aggregation over the transformed frame;
-    // persist so the final consumer does not recompute the whole chain
-    // (keys + dedup shuffle) a second time.
-    val needsCheck = cfg.critical.all.nonEmpty || cfg.critical.anyOf.nonEmpty
-    if (needsCheck) df = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (missAll, missAny) = criticalIssues(df, cfg.critical)
-    if (cfg.promote.onCriticalFail == "error" && (missAll.nonEmpty || missAny.nonEmpty))
-      throw new TransformHardFail(
-        s"[${cfg.dataset}] critical failure: missing_all=$missAll missing_any_of=${missAny.size}")
+    if (cfg.padMissing) df = padMissing(df, cfg.expectedColumns)
+    df
+  }
+
+  /** The schema-policy checks (missing / extra columns, drift budget). */
+  private def enforceSchema(df: DataFrame, cfg: DatasetConfig): Unit = {
+    val diff = schemaDiff(df, cfg.expectedColumns)
     if (cfg.promote.failOnMissingExpected && diff.missing.nonEmpty)
       throw new TransformHardFail(s"[${cfg.dataset}] missing expected cols: ${diff.missing.take(10)}")
     if (cfg.promote.failOnExtraColumns && diff.extra.nonEmpty)
       throw new TransformHardFail(s"[${cfg.dataset}] extra cols present: ${diff.extra.take(10)}")
     if (cfg.promote.failOnSchemaDrift && diff.diffs > cfg.allowedSchemaDiffs)
       throw new TransformHardFail(s"[${cfg.dataset}] schema drift ${diff.diffs} > ${cfg.allowedSchemaDiffs}")
-    reorder(df, cfg.order)
   }
 }

@@ -286,14 +286,10 @@ object StreamOps {
     */
   def upsertIntoParquet(batch: DataFrame, targetDir: String,
       keys: Seq[String], latestBy: Option[String] = None,
-      tieBreakers: Seq[String] = Nil, preDeduped: Boolean = false,
+      tieBreakers: Seq[String] = Nil,
       stamp: Option[Column] = None): Unit =
     mergeIntoParquet(batch, targetDir) { (spark, targetExists) =>
-      // preDeduped: the caller already ran the dedup window (e.g. to
-      // observe duplicate metrics on it) — re-running it here would add
-      // a second whole-batch shuffle for nothing.
-      val deduped =
-        if (preDeduped) batch else Transform.dedupByKey(batch, keys, latestBy, tieBreakers)
+      val deduped = Transform.dedupByKey(batch, keys, latestBy, tieBreakers)
       // stamp: the reference's inserted_at/updated_at row-stamping rides
       // the merge (Transform.upsertStamped) — pass `current_timestamp()`
       // per batch in production, a deterministic batch-seq in tests.
@@ -1052,29 +1048,37 @@ object StreamOps {
 
   /** Shared merge-and-swap skeleton: heal a half-finished previous swap,
     * build the merged frame (given whether a target exists), write it to
-    * staging, then swap. Swap order is crash-recoverable: target → .old,
-    * staging → target, delete .old; a crash window leaves either the old
-    * target or a recoverable `.old` (healed on the next call). True
-    * atomicity needs a transactional table format — on object stores
-    * rename is copy+delete, so widen the maintenance window accordingly.
+    * staging, run `preCommit`, then swap. Swap order is crash-recoverable:
+    * target → .old, staging → target, delete .old; a crash window leaves
+    * either the old target or a recoverable `.old` (healed on the next
+    * call). True atomicity needs a transactional table format — on object
+    * stores rename is copy+delete, so widen the maintenance window
+    * accordingly.
+    *
+    * `preCommit` runs after the staging write and before the first rename:
+    * a check over what that write observed (e.g. `Dataset.observe`
+    * counts) that throws to abandon the merge with the target untouched.
     */
-  private[graft] def mergeIntoParquet(batch: DataFrame, targetDir: String)(
+  private[graft] def mergeIntoParquet(batch: DataFrame, targetDir: String,
+      preCommit: () => Unit = () => ())(
       merge: (org.apache.spark.sql.SparkSession, Boolean) => DataFrame): Unit = {
     val spark = batch.sparkSession
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     val target = new Path(targetDir)
     val old = new Path(targetDir + ".old")
     val fs = target.getFileSystem(hadoopConf)
-    // Heal a crash between the two renames of a previous call.
-    if (!fs.exists(target) && fs.exists(old)) fs.rename(old, target)
-    val merged = merge(spark, fs.exists(target))
-    val tmp = new Path(targetDir + ".staging")
-    merged.write.mode("overwrite").parquet(tmp.toString)
     // Hadoop rename/delete report failure by RETURNING false — every step
     // must be checked or a failed rename cascades into deleting the only
     // copy of the data.
     def must(ok: Boolean, what: String): Unit =
       if (!ok) throw new java.io.IOException(s"mergeIntoParquet: $what failed for $targetDir")
+    // Heal a crash between the two renames of a previous call.
+    if (!fs.exists(target) && fs.exists(old)) must(fs.rename(old, target), "heal .old -> target")
+    val merged = merge(spark, fs.exists(target))
+    val tmp = new Path(targetDir + ".staging")
+    merged.write.mode("overwrite").parquet(tmp.toString)
+    try preCommit()
+    catch { case e: Throwable => fs.delete(tmp, true); throw e }
     if (fs.exists(old)) must(fs.delete(old, true), "delete stale .old")
     if (fs.exists(target)) must(fs.rename(target, old), "rename target -> .old")
     must(fs.rename(tmp, target), "rename .staging -> target")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Audit, SchemaDiff}
+import graft.operators.Audit
 import graft.sources.Ingest
 
 class EngineSpec extends AnyFunSuite {
@@ -101,21 +101,6 @@ class EngineSpec extends AnyFunSuite {
     val second = Ingest.extractUpdated(spark, cfg2, statePath)
     assert(second.isDefined)
     assert(second.get._1.as[(Int, String)].collect().toSeq == Seq((3, "c")))
-  }
-
-  test("audit: run + resource rows append and read back") {
-    val dir = Files.createTempDirectory("graft-audit").toString
-    val now = new java.sql.Timestamp(1700000000000L)
-    val transformed = Seq((1L, "k1"), (2L, "k1"), (3L, "k2")).toDF("id", "business_key")
-    val res = Audit.resourceMetrics("r1", "resA", rowsIn = 4, transformed,
-      diff = SchemaDiff(missing = Seq("m1"), extra = Nil))
-    assert(res.rows_out == 3 && res.duplicates_key == 1 &&
-      res.dedup_rows_dropped == 1 && res.schema_missing == 1)
-    Audit.appendRun(spark, dir,
-      Audit.RunRow("r1", now, now, "ok", 1, 4, 3, null))
-    Audit.appendResources(spark, dir, Seq(res))
-    assert(Audit.readRuns(spark, dir).count() == 1)
-    assert(Audit.readResources(spark, dir).filter(col("run_id") === "r1").count() == 1)
   }
 
   test("partitioned sink: hive layout, bounded files per partition, pruned reads") {
