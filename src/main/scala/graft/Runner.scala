@@ -17,10 +17,10 @@ import graft.streaming.StreamOps
   *    stage without its eager critical check) and its own keep-latest
   *    dedup window;
   *  - the resources, in resource-id order, and the current target are
-  *    merged by key in one window (`Transform.upsertInOrder`) — the same
-  *    rows as merging the resources one after another, the later resource
-  *    winning an exact tie — and written once to the target's staging
-  *    directory (`StreamOps.mergeIntoParquet`);
+  *    merged by key in one window (`Transform.merge`) — the same rows as
+  *    merging the resources one after another, the later resource winning
+  *    an exact tie — and written once to the target's staging directory
+  *    (`StreamOps.mergeIntoParquet`);
   *  - all audit figures (rows in and out, duplicate keys, critical and
   *    recommended non-null counts) ride that action as `Dataset.observe`
   *    metrics, so no resource is scanned twice;
@@ -71,10 +71,10 @@ object Runner {
           }) { (spark, targetExists) =>
           // latestBy participates against the TARGET too: a re-delivered
           // stale row must not regress a newer target row.
-          Transform.upsertInOrder(
+          Transform.merge(
             if (targetExists) Some(spark.read.parquet(targetDir)) else None,
             staged.map(_.loaded), Seq(keyCol),
-            tieBreakers = cfg.integrity.tieBreakers, latestBy = cfg.integrity.latestBy)
+            latestBy = cfg.integrity.latestBy, tieBreakers = cfg.integrity.tieBreakers)
         }
       }
     } catch {
@@ -151,9 +151,10 @@ object Runner {
       if (checked.columns.contains(cfg.load.upsertKey)) cfg.load.upsertKey
       else if (checked.columns.contains("surrogate_id")) "surrogate_id"
       else "business_key"
-    // The upsert's own dedup window, applied HERE so rows_out and the
+    // The keep-latest dedup window, applied HERE so rows_out and the
     // duplicate-key count (`__rn = 2` ≡ "key has a 2nd row") are observed
-    // on it in-flight; the merge then takes one row per key per resource.
+    // on it in-flight. The merge would pick the same row per key from the
+    // raw rows; these counts are why each resource keeps its own window.
     val ranked = Transform.dedupRank(checked, Seq(keyCol),
       latestBy = cfg.integrity.latestBy, tieBreakers = cfg.integrity.tieBreakers)
     val outObs = Observation(s"graft_out_${runId}_$rid")

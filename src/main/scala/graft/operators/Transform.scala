@@ -18,7 +18,7 @@ final case class SchemaDiff(missing: Seq[String], extra: Seq[String]) {
 
 /** The reference's transform stage re-expressed as composable DataFrame
   * operators. Every operator is a narrow projection/filter (no shuffle)
-  * except dedup/upsert (one shuffle on the key) — at 100 TB the whole
+  * except dedup/merge (one shuffle on the key) — at 100 TB the whole
   * cleanup chain fuses into a single whole-stage-codegen'd scan.
   *
   * Reference: etl/transform.py (per-function citations below).
@@ -253,7 +253,7 @@ object Transform {
   }
 
   // ------------------------------------------------------------------
-  // Dedup / upsert (reference etl/transform.py:495-507, etl/load.py upsert)
+  // Dedup / merge (reference etl/transform.py:495-507, etl/load.py upsert)
   // ------------------------------------------------------------------
 
   /** Keep exactly one row per key. `latestBy` descending picks "latest";
@@ -280,25 +280,26 @@ object Transform {
       latestBy: Option[String] = None,
       tieBreakers: Seq[String] = Nil): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(keepOrdering(latestBy, tieBreakers): _*)
+      .orderBy(keepOrdering(latestBy, tieBreakers, tagged = false): _*)
     df.withColumn("__rn", row_number().over(w))
   }
 
-  /** The keep-latest ordering every dedup window uses: `latestBy`
-    * descending (nulls last), then `tieBreakers` ascending; an arbitrary
-    * but stable pick when neither is given. Shared so fused variants
-    * (e.g. the bucketed first load's kb-clustered window) cannot drift
-    * from [[dedupRank]].
+  /** The keep-latest ordering of every keyed window ([[dedupRank]] and
+    * [[merge]]): `latestBy` descending (nulls last); over a [[tagSources]]
+    * union, the later source next; then `tieBreakers` ascending. Without
+    * `latestBy` and `tieBreakers`, the pick among one source's rows is
+    * arbitrary but stable (`monotonically_increasing_id`).
     */
-  private[graft] def keepOrdering(latestBy: Option[String],
-      tieBreakers: Seq[String]): Seq[Column] = {
-    val ordering =
-      latestBy.map(col(_).desc_nulls_last).toSeq ++ tieBreakers.map(col(_).asc)
-    if (ordering.nonEmpty) ordering else Seq(monotonically_increasing_id().asc)
+  private def keepOrdering(latestBy: Option[String], tieBreakers: Seq[String],
+      tagged: Boolean): Seq[Column] = {
+    val ordering = latestBy.map(col(_).desc_nulls_last).toSeq ++
+      (if (tagged) Seq(col("__src").desc) else Nil) ++ tieBreakers.map(col(_).asc)
+    if (latestBy.nonEmpty || tieBreakers.nonEmpty) ordering
+    else ordering :+ monotonically_increasing_id().asc
   }
 
   /** Apply an insert/update/delete CHANGELOG to a snapshot (the CDC
-    * sibling of `upsert`, which cannot express deletes). `changes` must
+    * sibling of [[merge]], which cannot express deletes). `changes` must
     * carry the snapshot's columns plus `opCol` ('I'/'U'/'D' — I and U are
     * both upserts; D removes the key) and the `latestBy`/`tieBreakers`
     * ordering columns; per key the LATEST change wins, then extras are
@@ -319,36 +320,84 @@ object Transform {
       .unionByName(last.filter(col(opCol) =!= "D").select(payload: _*))
   }
 
-  /** Idempotent merge-by-key: rows from `updates` replace same-key rows in
-    * `current` (the LOAD upsert, reference etl/load.py:388-460, re-expressed
-    * as a distributed last-writer-wins merge — one shuffle on the key).
+  /** The LOAD merge by key (reference etl/load.py:388-460, re-expressed as
+    * a distributed keep-latest merge): one row per key out of `current`
+    * and the `updates` frames, in ONE window over one key shuffle.
+    *
+    * Per key the newest `latestBy` wins, nulls last, so a stale
+    * re-delivery cannot regress the target; an exact tie goes to the later
+    * update frame, and any update beats the current row; `tieBreakers`
+    * decide among one frame's rows. An update frame may hold several rows
+    * per key: within a frame the pick is exactly [[dedupByKey]]'s, so
+    * merging a raw batch equals merging its dedup, and several frames
+    * merge as if one after another in order.
+    *
+    * stamp: the reference's row stamping (sql/002_fn_set_updated_at.sql +
+    * sql/010:49-57: `inserted_at`/`updated_at` column defaults and a
+    * before-update trigger). `current` carries both columns and `updates`
+    * the payload only. Per key a winning update row keeps the key's
+    * existing `inserted_at` (a new key gets `stamp`) and sets `updated_at`
+    * to `stamp`, as the trigger fires on every executed UPDATE; a winning
+    * current row keeps both. With no current table every row gets `stamp`
+    * in both. `stamp` is any Column: `current_timestamp()` in production,
+    * a batch sequence number where results must hash-match across
+    * engines. The carry-over is one more window function over the same
+    * partitioning, so it reuses the one exchange.
+    *
+    * clusterBy = (c, n): the ONE exchange is an explicit n-partition hash
+    * repartition on column c instead of the window's implicit key
+    * exchange, and the window partitions by (c, keys…). Requires c =
+    * f(keys) carried by every input (e.g. a key-hash bucket column): then
+    * grouping by (c, keys) ≡ grouping by keys, and HashPartitioning(c)
+    * satisfies the window's ClusteredDistribution — so a caller that must
+    * WRITE partitioned by c afterwards (the bucketed table) gets merge and
+    * write layout from a single exchange.
     */
-  def upsert(
-      current: DataFrame,
-      updates: DataFrame,
-      keys: Seq[String],
-      tieBreakers: Seq[String] = Nil,
-      latestBy: Option[String] = None,
-      clusterBy: Option[(String, Int)] = None): DataFrame =
-    mergeTagged(tagSources(Some(current), Seq(updates)), keys, tieBreakers, latestBy, clusterBy)
-
-  /** [[upsert]] of several update frames in ONE window, equal to folding
-    * [[upsert]] over `updates` in order, starting from `current` (or from
-    * the first update when there is no current table). Each update frame
-    * must already be unique per key (e.g. filtered to rank 1 of
-    * [[dedupRank]]). Per key the newest `latestBy` wins, nulls last; an
-    * exact tie goes to the later update frame and any update beats the
-    * current row, as each step of the fold lets its batch win ties.
-    */
-  def upsertInOrder(
+  def merge(
       current: Option[DataFrame],
       updates: Seq[DataFrame],
       keys: Seq[String],
+      latestBy: Option[String] = None,
       tieBreakers: Seq[String] = Nil,
-      latestBy: Option[String] = None): DataFrame = {
-    require(updates.nonEmpty, "upsertInOrder needs at least one update frame")
-    if (current.isEmpty && updates.size == 1) updates.head
-    else mergeTagged(tagSources(current, updates), keys, tieBreakers, latestBy, None)
+      stamp: Option[Column] = None,
+      clusterBy: Option[(String, Int)] = None): DataFrame = {
+    require(updates.nonEmpty, "merge needs at least one update frame")
+    val (ins, upd) = ("inserted_at", "updated_at")
+    if (stamp.nonEmpty) {
+      require(updates.forall(u => !u.columns.contains(ins) && !u.columns.contains(upd)),
+        "updates carry the payload only — stamps are assigned by the merge")
+      require(current.forall(c => c.columns.contains(ins) && c.columns.contains(upd)),
+        s"current must carry $ins/$upd (a stamped merge into no table creates them)")
+    }
+    // A stamped merge into an existing table carries the current stamps.
+    val carry = stamp.nonEmpty && current.nonEmpty
+    val payload = if (!carry) updates else {
+      val cur = current.get.schema
+      updates.map(_.withColumn(ins, lit(null).cast(cur(ins).dataType))
+        .withColumn(upd, lit(null).cast(cur(upd).dataType)))
+    }
+    val tagged0 = tagSources(current, payload)
+    val tagged = clusterBy.map { case (c, n) => tagged0.repartition(n, col(c)) }
+      .getOrElse(tagged0)
+    val wKey = Window.partitionBy(clusterBy.map(c => col(c._1)).toSeq ++ keys.map(col): _*)
+    val ranked = tagged.withColumn("__rn",
+      row_number().over(wKey.orderBy(keepOrdering(latestBy, tieBreakers, tagged = true): _*)))
+    val winners = stamp match {
+      case None => ranked.filter(col("__rn") === 1)
+      case Some(st) if !carry =>
+        ranked.filter(col("__rn") === 1).withColumn(ins, st).withColumn(upd, st)
+      case Some(st) =>
+        ranked
+          // The key's pre-merge insert stamp, visible to whichever row wins
+          // (current side is unique per key by construction, so max == it).
+          .withColumn("__cur_ins", max(when(col("__src") === 0, col(ins))).over(wKey))
+          .filter(col("__rn") === 1)
+          .withColumn(ins, when(col("__src") =!= 0, coalesce(col("__cur_ins"), st))
+            .otherwise(col(ins)))
+          .withColumn(upd, when(col("__src") =!= 0, st).otherwise(col(upd)))
+          .drop("__cur_ins")
+    }
+    winners.drop("__rn", "__src")
   }
 
   /** `current` (tagged `__src` 0) and each update frame (1, 2, …) in one union. */
@@ -356,116 +405,6 @@ object Transform {
     (current.map(_.withColumn("__src", lit(0))).toSeq ++
       updates.zipWithIndex.map { case (u, i) => u.withColumn("__src", lit(i + 1)) })
       .reduce(_ unionByName _)
-
-  /** Keep one row per key of a [[tagSources]] union, by [[mergeOrdering]].
-    *
-    * clusterBy = (c, n): the merge's ONE exchange is an explicit
-    * n-partition hash repartition on column c instead of the window's
-    * implicit key exchange, and the window partitions by (c, keys…).
-    * Requires c = f(keys) (e.g. a key-hash bucket column carried by
-    * BOTH sides): then grouping by (c, keys) ≡ grouping by keys, and
-    * HashPartitioning(c) satisfies the window's ClusteredDistribution —
-    * so a caller that must WRITE partitioned by c afterwards (the
-    * bucketed-table merge) gets dedup + merge + write layout from a
-    * single exchange instead of three.
-    */
-  private def mergeTagged(tagged0: DataFrame, keys: Seq[String], tieBreakers: Seq[String],
-      latestBy: Option[String], clusterBy: Option[(String, Int)]): DataFrame = {
-    val tagged = clusterBy.map { case (c, n) => tagged0.repartition(n, col(c)) }
-      .getOrElse(tagged0)
-    val prefix = clusterBy.map(c => col(c._1)).toSeq
-    val w = Window.partitionBy(prefix ++ keys.map(col): _*)
-      .orderBy(mergeOrdering(latestBy, tieBreakers): _*)
-    tagged.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .drop("__rn", "__src")
-  }
-
-  /** The merge window's ordering over rows tagged with their source in
-    * `__src` (0 = current, higher = later update). With latestBy: the
-    * newest row wins regardless of side (stale re-deliveries cannot
-    * regress the target); the later source wins exact ties. Without:
-    * updates unconditionally replace current (classic upsert).
-    */
-  private def mergeOrdering(latestBy: Option[String], tieBreakers: Seq[String]): Seq[Column] =
-    latestBy.map(col(_).desc_nulls_last).toSeq ++
-      Seq(col("__src").desc) ++ tieBreakers.map(col(_).asc)
-
-  /** Add the load-timestamp pair to an INITIAL load (both columns =
-    * `stamp`) — the insert-default half of the reference's row-stamping
-    * (sql/002_fn_set_updated_at.sql + sql/010:49-57: `inserted_at`/
-    * `updated_at` column defaults and a before-update trigger).
-    */
-  def stampInitial(df: DataFrame, stamp: Column,
-      insertedCol: String = "inserted_at",
-      updatedCol: String = "updated_at"): DataFrame =
-    df.withColumn(insertedCol, stamp).withColumn(updatedCol, stamp)
-
-  /** [[upsert]] with the reference's row-stamping semantics (the
-    * `updated_at` trigger, sql/002 + sql/010:49-57, re-expressed in the
-    * merge): `current` carries `insertedCol`/`updatedCol` (from
-    * [[stampInitial]] or a previous stamped merge), `updates` carries
-    * the PAYLOAD only, and per key
-    *
-    *  - a winning batch row keeps the key's existing `inserted_at`
-    *    (insert-time provenance survives every later merge; a brand-new
-    *    key gets `stamp`) and refreshes `updated_at` to `stamp` — like
-    *    the trigger, which fires on every executed UPDATE;
-    *  - a winning current row (no batch row for the key, or `latestBy`
-    *    rejecting a stale re-delivery) keeps BOTH stamps untouched —
-    *    the trigger never fires on rows the merge does not write.
-    *
-    * `stamp` is any Column: `current_timestamp()` in production, a
-    * deterministic batch sequence number in tests/oracles (which is what
-    * makes the semantics cross-engine checkable — wall-clock stamps
-    * cannot hash-match). Same single key-shuffle as [[upsert]]: the
-    * stamp carry-over is one more window function over the identical
-    * partitioning, so both reuse one Exchange.
-    */
-  def upsertStamped(
-      current: DataFrame,
-      updates: DataFrame,
-      keys: Seq[String],
-      stamp: Column,
-      tieBreakers: Seq[String] = Nil,
-      latestBy: Option[String] = None,
-      insertedCol: String = "inserted_at",
-      updatedCol: String = "updated_at",
-      clusterBy: Option[(String, Int)] = None): DataFrame = {
-    require(current.columns.contains(insertedCol) &&
-      current.columns.contains(updatedCol),
-      s"current must carry $insertedCol/$updatedCol (stampInitial on first load)")
-    require(!updates.columns.contains(insertedCol) &&
-      !updates.columns.contains(updatedCol),
-      "updates carry the payload only — stamps are assigned by the merge")
-    val insT = current.schema(insertedCol).dataType
-    val updT = current.schema(updatedCol).dataType
-    val tagged0 = current.withColumn("__src", lit(0))
-      .unionByName(updates
-        .withColumn(insertedCol, lit(null).cast(insT))
-        .withColumn(updatedCol, lit(null).cast(updT))
-        .withColumn("__src", lit(1)))
-    // Same clusterBy contract as [[upsert]]: c must be f(keys); both
-    // windows share the explicit c-hash exchange.
-    val tagged = clusterBy.map { case (c, n) => tagged0.repartition(n, col(c)) }
-      .getOrElse(tagged0)
-    val prefix = clusterBy.map(c => col(c._1)).toSeq
-    val w = Window.partitionBy(prefix ++ keys.map(col): _*)
-      .orderBy(mergeOrdering(latestBy, tieBreakers): _*)
-    val wKey = Window.partitionBy(prefix ++ keys.map(col): _*)
-    tagged
-      .withColumn("__rn", row_number().over(w))
-      // The key's pre-merge insert stamp, visible to whichever row wins
-      // (current side is unique per key by construction, so max == it).
-      .withColumn("__cur_ins",
-        max(when(col("__src") === 0, col(insertedCol))).over(wKey))
-      .filter(col("__rn") === 1)
-      .withColumn(insertedCol,
-        when(col("__src") === 1, coalesce(col("__cur_ins"), stamp))
-          .otherwise(col(insertedCol)))
-      .withColumn(updatedCol,
-        when(col("__src") === 1, stamp).otherwise(col(updatedCol)))
-      .drop("__rn", "__src", "__cur_ins")
-  }
 
   // ------------------------------------------------------------------
   // Schema rules (reference etl/transform.py:188-237,509-571)

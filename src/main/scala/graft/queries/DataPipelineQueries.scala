@@ -20,57 +20,10 @@ object DataPipelineQueries {
 
   private val Toks = Q.duckToks
 
-  private def deleteRec(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-
-  /** Per-JVM scratch slot for the WET ingest round trip (the
-    * StreamQueries.upsertScratch discipline: one wiped-and-reused dir,
-    * shutdown-hook cleanup; results localCheckpoint before re-wipe).
-    */
-  private lazy val wetScratch: java.nio.file.Path = {
-    val root = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-wet-e2e-" + ProcessHandle.current().pid())
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(root)))
-    root
-  }
-
-  /** Per-JVM scratch slot for the xlsx ingest round trip (the
-    * [[wetScratch]] discipline).
-    */
-  private lazy val xlsxScratch: java.nio.file.Path = {
-    val root = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-xlsx-e2e-" + ProcessHandle.current().pid())
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(root)))
-    root
-  }
-
-  /** Per-JVM scratch slot for the incremental STATE→EXTRACT→LOAD spine
-    * (the [[wetScratch]] discipline).
-    */
-  private lazy val ingestStateScratch: java.nio.file.Path = {
-    val root = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-ingest-e2e-" + ProcessHandle.current().pid())
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(root)))
-    root
-  }
-
-  /** Per-JVM scratch slot for the run-log upload round trip (the
-    * [[wetScratch]] discipline).
-    */
-  private lazy val runlogScratch: java.nio.file.Path = {
-    val root = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-runlog-e2e-" + ProcessHandle.current().pid())
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(root)))
-    root
-  }
+  private lazy val wetScratch = Scratch.slot("wet-e2e")
+  private lazy val xlsxScratch = Scratch.slot("xlsx-e2e")
+  private lazy val ingestStateScratch = Scratch.slot("ingest-e2e")
+  private lazy val runlogScratch = Scratch.slot("runlog-e2e")
 
   /** Record-level sink for the run-log e2e: each batch lands as ONE
     * file named by the sha256 of its serialized payload, so a retried
@@ -928,7 +881,7 @@ object DataPipelineQueries {
           lit("WARC/1.0\r\nWARC-Type: warcinfo\r\nContent-Length: 19" +
             "\r\n\r\nisPartOf: graft-wet").as("value"))
         wetScratch.synchronized {
-          deleteRec(wetScratch)
+          Scratch.fresh(wetScratch)
           val path = wetScratch.resolve("wet").toString
           conv.unionByName(info).write.mode("overwrite").text(path)
           val staged = Wet.conversions(s, path)
@@ -1004,7 +957,7 @@ object DataPipelineQueries {
       (s, dir) => {
         import graft.sources.Xlsx
         xlsxScratch.synchronized {
-          deleteRec(xlsxScratch)
+          Scratch.fresh(xlsxScratch)
           val landing = java.nio.file.Files
             .createDirectories(xlsxScratch.resolve("landing")).toString
           import s.implicits._
@@ -1097,7 +1050,7 @@ object DataPipelineQueries {
     // oracle-caught. Each round: extractUpdated → keep-latest dedup
     // (each resource carries poison duplicate rows that must lose) →
     // stamped upsert merge (inserted_at survives the res_1 rewrite —
-    // the upsertStamped provenance rule — while updated_at moves to
+    // the stamped merge's provenance rule — while updated_at moves to
     // run 2) → etl_runs/etl_run_resources appended → state promoted
     // LAST (the reference's promote-after-load-OK rule). Output = the
     // final target per-row JOINED to both runs' per-resource audit
@@ -1112,8 +1065,7 @@ object DataPipelineQueries {
         import graft.operators.Audit
         import graft.sources.Ingest
         ingestStateScratch.synchronized {
-          deleteRec(ingestStateScratch)
-          val root = java.nio.file.Files.createDirectories(ingestStateScratch)
+          val root = Scratch.fresh(ingestStateScratch)
           val landing = java.nio.file.Files
             .createDirectories(root.resolve("landing")).toString
           val statePath = s"$root/state.properties"
@@ -1248,8 +1200,7 @@ object DataPipelineQueries {
     Q("x_runlog_ingest_e2e",
       (s, dir) => {
         runlogScratch.synchronized {
-          deleteRec(runlogScratch)
-          val root = java.nio.file.Files.createDirectories(runlogScratch)
+          val root = Scratch.fresh(runlogScratch)
           val logDir = root.resolve("log").toString
           val landed = java.nio.file.Files
             .createDirectories(root.resolve("landed")).toString

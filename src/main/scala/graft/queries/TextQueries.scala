@@ -27,28 +27,8 @@ object TextQueries {
       graft.operators.Bpe.trainFromCorpus(
         Tables.documents(s, dir), "text", numMerges = 50, maxWords = 2000))
 
-  /** Per-JVM scratch slot for the persisted IVF×PQ twin (the
-    * StreamQueries.upsertScratch discipline: one wiped-and-reused dir,
-    * shutdown-hook cleanup; the result is localCheckpointed before the
-    * next invocation wipes it).
-    */
-  private lazy val ivfPqScratch: java.nio.file.Path = {
-    val root = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-ivfpq-twin-" + ProcessHandle.current().pid())
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(root)))
-    root
-  }
-
-  /** Scratch slot for the persisted substring-gram index (same
-    * discipline as [[ivfPqScratch]]). */
-  private lazy val substrScratch: java.nio.file.Path = {
-    val root = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-substr-index-" + ProcessHandle.current().pid())
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(root)))
-    root
-  }
+  private lazy val ivfPqScratch = Scratch.slot("ivfpq-twin")
+  private lazy val substrScratch = Scratch.slot("substr-index")
 
   // ------------------------------------------------------------------
   // Decode-once media feature store (SURVEY §2.3 rows 41/41c/41d/88):
@@ -58,20 +38,7 @@ object TextQueries {
   // visible in exactly one board slot regardless of query order.
   // ------------------------------------------------------------------
 
-  private def deleteRec(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-
-  private lazy val mediaScratch: java.nio.file.Path = {
-    val root = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-media-store-" + ProcessHandle.current().pid())
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(root)))
-    root
-  }
+  private lazy val mediaScratch = Scratch.slot("media-store")
 
   private val mediaStoreBuilt =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -416,7 +383,7 @@ object TextQueries {
         val batch = withThr.filter(col("doc_id") >= col("thr"))
           .select("doc_id", "text")
         substrScratch.synchronized {
-          deleteRec(substrScratch)
+          Scratch.fresh(substrScratch)
           val path = substrScratch.toString
           graft.operators.SubstrIndex.build(
             corpus, "doc_id", "text", path, minTokens = 8)
@@ -1294,7 +1261,7 @@ object TextQueries {
         val pq = graft.operators.PqIndex.train(
           emb, "embedding", m = 8, k = 16, maxIter = 5)
         ivfPqScratch.synchronized {
-          deleteRec(ivfPqScratch)
+          Scratch.fresh(ivfPqScratch)
           val path = ivfPqScratch.toString
           graft.operators.IvfPq.build(emb, "vec_id", "embedding", path, ivf, pq)
           val queries = emb.filter(col("vec_id") < 5)

@@ -20,24 +20,7 @@ object TransformQueries {
   private val NaTokens = Seq("", "NA", "N/A", "na", "null", "None", "none", "Nan", "NaN", "src0")
   private def sqlList(xs: Seq[String]) = xs.map(s => s"'$s'").mkString(", ")
 
-  private def deleteRec(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-
-  /** Per-JVM scratch slot for the bucketed-upsert twin (the
-    * StreamQueries.upsertScratch discipline: one wiped-and-reused dir,
-    * shutdown-hook cleanup, result localCheckpointed before reuse).
-    */
-  private lazy val bucketScratch: java.nio.file.Path = {
-    val root = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-bucket-twin-" + ProcessHandle.current().pid())
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(root)))
-    root
-  }
+  private lazy val bucketScratch = Scratch.slot("bucket-twin")
 
   val all: Seq[Q] = Seq(
 
@@ -280,7 +263,7 @@ object TransformQueries {
         val updates = o.filter(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey"), col("o_custkey"),
             (col("o_totalprice") * 2).as("o_totalprice"))
-        Transform.upsert(current, updates, keys = Seq("o_orderkey"))
+        Transform.merge(Some(current), Seq(updates), keys = Seq("o_orderkey"))
           .orderBy(col("o_orderkey"))
       },
       Some("""
@@ -311,7 +294,7 @@ object TransformQueries {
         val o = Tables.orders(s, dir)
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         bucketScratch.synchronized {
-          deleteRec(bucketScratch)
+          Scratch.fresh(bucketScratch)
           val t = bucketScratch.toString + "/t"
           val b1 = o.filter(col("o_orderkey") % 3 =!= 0)
           val b2 = o.filter(col("o_orderkey") % 2 === 0)
@@ -351,14 +334,15 @@ object TransformQueries {
       (s, dir) => {
         val o = Tables.orders(s, dir)
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        val init = Transform.stampInitial(
-          o.filter(col("o_orderkey") % 3 =!= 0), lit(0L))
+        val keys = Seq("o_orderkey")
+        val init = Transform.merge(None, Seq(o.filter(col("o_orderkey") % 3 =!= 0)),
+          keys, stamp = Some(lit(0L)))
         val b1 = o.filter(col("o_orderkey") % 2 === 0)
           .withColumn("o_totalprice", col("o_totalprice") * 2)
-        val m1 = Transform.upsertStamped(init, b1, Seq("o_orderkey"), lit(1L))
+        val m1 = Transform.merge(Some(init), Seq(b1), keys, stamp = Some(lit(1L)))
         val b2 = o.filter(col("o_orderkey") % 5 === 0)
           .withColumn("o_totalprice", col("o_totalprice") * 3)
-        Transform.upsertStamped(m1, b2, Seq("o_orderkey"), lit(2L))
+        Transform.merge(Some(m1), Seq(b2), keys, stamp = Some(lit(2L)))
           .orderBy(col("o_orderkey"))
       },
       Some("""

@@ -63,15 +63,24 @@ object BucketedTable {
   }
 
   /** Merge one batch into the bucketed target (creating it on first
-    * call), pruned to the batch's buckets. Same merge semantics as
-    * [[graft.streaming.StreamOps.upsertIntoParquet]]: within-batch
-    * dedup by (latestBy desc, tieBreakers asc), `latestBy` protects the
-    * target against stale re-deliveries, `stamp` threads the
-    * inserted_at/updated_at row-stamping through the merge.
+    * call), pruned to the batch's buckets. Each branch is one
+    * [[Transform.merge]] of the raw batch, so the semantics are
+    * [[graft.streaming.StreamOps.upsertIntoParquet]]'s: within-batch
+    * keep-latest by (latestBy desc, tieBreakers asc), `latestBy` protects
+    * the target against stale re-deliveries, `stamp` threads the
+    * inserted_at/updated_at row stamping through the merge.
+    *
+    * Both merges are clustered by kb: kb = f(keys), so all rows of a key
+    * share a bucket — a window partitioned by (kb, keys…) groups exactly
+    * by keys, and HashPartitioning(kb) already satisfies its
+    * ClusteredDistribution; the partitionBy write needs only the
+    * kb-prefix of the sort the window ran. ONE exchange per merge, where
+    * a keys-hash window plus a kb repartition for the write would be two
+    * full shuffles of the batch.
     */
   def upsert(batch: DataFrame, targetDir: String, keys: Seq[String],
       numBuckets: Int = 256, latestBy: Option[String] = None,
-      tieBreakers: Seq[String] = Nil, preDeduped: Boolean = false,
+      tieBreakers: Seq[String] = Nil,
       stamp: Option[Column] = None,
       maxRecordsPerFile: Long = 5000000L): Unit = {
     require(keys.nonEmpty, "bucketed upsert needs at least one key column")
@@ -92,27 +101,9 @@ object BucketedTable {
         // (the old meta-after-rename order had exactly that window, and
         // the next upsert's None branch would have read it as "no
         // table" and wiped it).
-        //
-        // ONE exchange (dedup + bucket layout fused): kb = f(keys), so
-        // all rows of a key share a bucket — a window partitioned by
-        // (kb, keys…) groups exactly by keys, and HashPartitioning(kb)
-        // already satisfies its ClusteredDistribution; the partitionBy
-        // write needs only the kb-prefix of the sort the window ran.
-        // The old shape paid a keys-hash window exchange AND the
-        // writeBuckets kb repartition — two full shuffles of the batch.
-        val bk = batch.withColumn(BucketCol, bucketOf(keys, numBuckets))
-          .repartition(numBuckets, col(BucketCol))
-        val deduped =
-          if (preDeduped) bk
-          else {
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy((col(BucketCol) +: keys.map(col)): _*)
-              .orderBy(Transform.keepOrdering(latestBy, tieBreakers): _*)
-            bk.withColumn("__rn", row_number().over(w))
-              .filter(col("__rn") === 1).drop("__rn")
-          }
-        val init = stamp.map(st => Transform.stampInitial(deduped, st))
-          .getOrElse(deduped)
+        val init = Transform.merge(None,
+          Seq(batch.withColumn(BucketCol, bucketOf(keys, numBuckets))), keys,
+          latestBy, tieBreakers, stamp, clusterBy = Some((BucketCol, numBuckets)))
         val staging = new Path(targetDir + ".staging")
         fs.delete(staging, true)
         writePreBucketed(init, staging.toString, maxRecordsPerFile)
@@ -137,9 +128,7 @@ object BucketedTable {
             s"merge called with $keys")
         // The batch is micro-batch-sized: materialize it once (it feeds
         // the touched-bucket collect AND the merge union). RAW batch —
-        // the merge window dedups it in the same pass (a pre-dedup
-        // window picks the same per-key winner the merge ordering
-        // would, so running it separately was a pure extra exchange).
+        // the merge window picks each key's winner within it too.
         val bk = graft.operators.Materialize(
           batch.withColumn(BucketCol, bucketOf(keys, n)))
         val touched = bk.select(BucketCol).distinct()
@@ -148,21 +137,12 @@ object BucketedTable {
           // Partition-PRUNED target read: the In over ≤ numBuckets int
           // literals is planning-cheap (the 65k-literal lesson applies
           // to corpus-sized sets, not bucket counts). kb is KEPT on both
-          // sides: the merge window clusters by it (one explicit kb
-          // exchange replaces the old keys-window exchange + writeBuckets
-          // kb repartition — two full shuffles of target+batch bytes),
-          // and the write below reuses that layout as-is.
+          // sides: the merge clusters by it, and the write below reuses
+          // that layout as-is.
           val tgt = spark.read.parquet(targetDir)
             .filter(col(BucketCol).isin(touched.map(Int.box).toIndexedSeq: _*))
-          val cluster = Some((BucketCol, math.max(touched.length, 1)))
-          val merged = stamp match {
-            case None =>
-              Transform.upsert(tgt, bk, keys, tieBreakers, latestBy,
-                clusterBy = cluster)
-            case Some(st) =>
-              Transform.upsertStamped(tgt, bk, keys, st,
-                tieBreakers, latestBy, clusterBy = cluster)
-          }
+          val merged = Transform.merge(Some(tgt), Seq(bk), keys, latestBy,
+            tieBreakers, stamp, clusterBy = Some((BucketCol, touched.length)))
           val staging = new Path(targetDir + ".staging")
           fs.delete(staging, true)
           writePreBucketed(merged, staging.toString, maxRecordsPerFile)

@@ -227,9 +227,11 @@ object StreamOps {
       .start()
 
   /** foreachBatch upsert sink: merge each micro-batch into a parquet
-    * target by key (last-writer-wins within the batch via tieBreakers).
-    * The swap is write-new → rename, via the Hadoop FileSystem API so it
-    * works on HDFS/object-store committers, not just local disk.
+    * target by key with [[Transform.merge]] — keep-latest by `latestBy`,
+    * then `tieBreakers`, within the batch and against the target;
+    * `stamp(batchId)` stamps the rows each batch writes. The swap is
+    * write-new → rename, via the Hadoop FileSystem API so it works on
+    * HDFS/object-store committers, not just local disk.
     *
     * `buckets = Some(n)` switches the target to the key-hash-bucketed
     * layout ([[graft.sources.BucketedTable]]) and makes each merge
@@ -265,11 +267,17 @@ object StreamOps {
       }
       .start()
 
-  /** One merge step: read current target (if any), upsert the batch, swap
-    * directories. Within-batch duplicate keys keep the LATEST row by
-    * `latestBy` (descending), then `tieBreakers` ascending — matching the
-    * keep-latest integrity semantics (ascending-only tie-breakers would
-    * silently keep the OLDEST row).
+  /** One merge step: read the current target (if any), merge the raw
+    * batch into it with [[Transform.merge]], swap directories. Duplicate
+    * keys within the batch keep the LATEST row by `latestBy`
+    * (descending), then `tieBreakers` ascending — the keep-latest
+    * integrity semantics (ascending-only tie-breakers would silently keep
+    * the OLDEST row); the merge window picks that row itself, so the
+    * batch gets no separate dedup pass. `latestBy` also protects the
+    * target: a re-delivered stale row cannot regress a newer one. `stamp`
+    * threads the reference's inserted_at/updated_at row stamping through
+    * the merge: `current_timestamp()` per batch in production, a
+    * deterministic batch sequence number in tests.
     *
     * Per-batch cost is O(|target|) — the full table is read and
     * rewritten every merge. Fine for small/medium targets where the
@@ -289,22 +297,8 @@ object StreamOps {
       tieBreakers: Seq[String] = Nil,
       stamp: Option[Column] = None): Unit =
     mergeIntoParquet(batch, targetDir) { (spark, targetExists) =>
-      val deduped = Transform.dedupByKey(batch, keys, latestBy, tieBreakers)
-      // stamp: the reference's inserted_at/updated_at row-stamping rides
-      // the merge (Transform.upsertStamped) — pass `current_timestamp()`
-      // per batch in production, a deterministic batch-seq in tests.
-      (targetExists, stamp) match {
-        case (false, None)     => deduped
-        case (false, Some(st)) => Transform.stampInitial(deduped, st)
-        case (true, None)      =>
-          // latestBy participates against the TARGET too: a re-delivered
-          // stale batch row must not regress a newer target row.
-          Transform.upsert(spark.read.parquet(targetDir), deduped, keys,
-            tieBreakers, latestBy)
-        case (true, Some(st))  =>
-          Transform.upsertStamped(spark.read.parquet(targetDir), deduped,
-            keys, st, tieBreakers, latestBy)
-      }
+      Transform.merge(if (targetExists) Some(spark.read.parquet(targetDir)) else None,
+        Seq(batch), keys, latestBy, tieBreakers, stamp)
     }
 
   /** foreachBatch CDC sink: compact each micro-batch's insert/update/

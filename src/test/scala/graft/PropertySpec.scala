@@ -146,8 +146,8 @@ class PropertySpec extends AnyFunSuite {
         currentRows.toDF("k", "v"), Seq("k"), None, Seq("v"))
       val updates = Transform.dedupByKey(
         updateRows.toDF("k", "v"), Seq("k"), None, Seq("v"))
-      val once = Transform.upsert(current, updates, Seq("k"))
-      val twice = Transform.upsert(once, updates, Seq("k"))
+      val once = Transform.merge(Some(current), Seq(updates), Seq("k"))
+      val twice = Transform.merge(Some(once), Seq(updates), Seq("k"))
       // Idempotent: re-applying the same updates changes nothing.
       assert(twice.except(once).count() == 0 && once.except(twice).count() == 0)
       // Updates win: every update key carries the update's value.
@@ -157,6 +157,40 @@ class PropertySpec extends AnyFunSuite {
       // Non-updated current keys survive untouched.
       val curMap = current.as[(Long, String)].collect().toMap
       (curMap.keySet -- updMap.keySet).foreach(k => assert(onceMap(k) == curMap(k)))
+    }
+  }
+
+  test("merging a raw batch equals merging its dedupByKey, stamped or not") {
+    // 16 keys over few ts values (null too): in-batch duplicate keys, and
+    // batch rows older than the current row of their key (stale
+    // re-deliveries). `id` is unique per row, so a `latestBy` tie has
+    // exactly one tie-break winner.
+    val rowGen = Gen.zip(Gen.chooseNum(0L, 15L),
+      Gen.frequency(9 -> Gen.chooseNum(0L, 4L).map(Option(_)), 1 -> Gen.const(None)),
+      Gen.alphaNumStr)
+    def frame(rows: Seq[(Long, Option[Long], String)], tag: String) =
+      rows.zipWithIndex.map { case ((k, ts, v), i) => (k, ts, f"$tag$i%03d", v) }
+        .toDF("k", "ts", "id", "v")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val cases = Gen.zip(Gen.listOfN(30, rowGen), Gen.listOfN(40, rowGen),
+      Gen.oneOf(true, false), Gen.oneOf(true, false))
+    samples(cases, 8).foreach { case (curRows, rawRows, ordered, stamped) =>
+      val keys = Seq("k")
+      // Unordered: no latestBy or tieBreakers, where the pick falls back
+      // to dedupByKey's arbitrary-but-stable row order.
+      val (latestBy, tieBreakers) = if (ordered) (Some("ts"), Seq("id")) else (None, Nil)
+      def stamp(n: Long) = if (stamped) Some(lit(n)) else None
+      val raw = frame(rawRows, "r")
+      val cur = Transform.merge(None, Seq(frame(curRows, "c")), keys, latestBy, tieBreakers,
+        stamp(1L))
+      val viaRaw = Transform.merge(Some(cur), Seq(raw), keys, latestBy, tieBreakers, stamp(2L))
+      val viaDedup = Transform.merge(Some(cur),
+        Seq(Transform.dedupByKey(raw, keys, latestBy, tieBreakers)),
+        keys, latestBy, tieBreakers, stamp(2L))
+      assert(rows(viaRaw) == rows(viaDedup), s"ordered=$ordered stamped=$stamped")
+      // With no current table a merge is exactly the batch's dedup.
+      if (!stamped) assert(rows(Transform.merge(None, Seq(raw), keys, latestBy, tieBreakers)) ==
+        rows(Transform.dedupByKey(raw, keys, latestBy, tieBreakers)))
     }
   }
 

@@ -73,7 +73,7 @@ class TransformSpec extends AnyFunSuite {
   test("upsert: updates replace current rows, new keys inserted, others kept") {
     val current = Seq((1, "old1"), (2, "old2")).toDF("k", "v")
     val updates = Seq((2, "new2"), (3, "new3")).toDF("k", "v")
-    val out = Transform.upsert(current, updates, Seq("k"))
+    val out = Transform.merge(Some(current), Seq(updates), Seq("k"))
       .orderBy("k").as[(Int, String)].collect()
     assert(out.toSeq == Seq((1, "old1"), (2, "new2"), (3, "new3")))
   }
@@ -81,19 +81,19 @@ class TransformSpec extends AnyFunSuite {
   test("upsert with latestBy: stale update cannot regress a newer current row") {
     val current = Seq((1, "new", "2026-06-01"), (2, "cur", "2020-01-01")).toDF("k", "v", "u")
     val stale = Seq((1, "old", "2020-01-01"), (2, "upd", "2026-01-01")).toDF("k", "v", "u")
-    val out = Transform.upsert(current, stale, Seq("k"), latestBy = Some("u"))
+    val out = Transform.merge(Some(current), Seq(stale), Seq("k"), latestBy = Some("u"))
       .orderBy("k").select("v").as[String].collect().toSeq
     assert(out == Seq("new", "upd")) // k=1 keeps newer current; k=2 takes newer update
   }
 
-  test("upsertStamped: inserted_at survives merges, updated_at moves only on written keys") {
+  test("stamped merge: inserted_at survives, updated_at moves on written keys") {
     // The reference's updated_at trigger semantics (sql/002 + sql/010):
     // batch 1 inserts k=1,2; batch 2 re-writes k=2 and inserts k=3.
-    val init = Transform.stampInitial(
-      Seq((1, "a"), (2, "b")).toDF("k", "v"), lit(10L))
-    val m = Transform.upsertStamped(init,
-      Seq((2, "b2"), (3, "c")).toDF("k", "v"), Seq("k"), lit(20L))
-      .orderBy("k").select("k", "v", "inserted_at", "updated_at")
+    val init = Transform.merge(None,
+      Seq(Seq((1, "a"), (2, "b")).toDF("k", "v")), Seq("k"), stamp = Some(lit(10L)))
+    val cur = Transform.merge(Some(init),
+      Seq(Seq((2, "b2"), (3, "c")).toDF("k", "v")), Seq("k"), stamp = Some(lit(20L)))
+    val m = cur.orderBy("k").select("k", "v", "inserted_at", "updated_at")
       .as[(Int, String, Long, Long)].collect().toSeq
     assert(m == Seq(
       (1, "a", 10L, 10L),    // untouched: both stamps stable
@@ -101,35 +101,76 @@ class TransformSpec extends AnyFunSuite {
       (3, "c", 20L, 20L)))   // new key: both = merge stamp
     // Third merge re-delivers k=2 with the SAME payload: the trigger
     // fires on every executed UPDATE, so updated_at still advances.
-    val cur = Transform.upsertStamped(init,
-      Seq((2, "b2"), (3, "c")).toDF("k", "v"), Seq("k"), lit(20L))
-    val m2 = Transform.upsertStamped(cur,
-      Seq((2, "b2")).toDF("k", "v"), Seq("k"), lit(30L))
+    val m2 = Transform.merge(Some(cur),
+      Seq(Seq((2, "b2")).toDF("k", "v")), Seq("k"), stamp = Some(lit(30L)))
       .orderBy("k").select("k", "inserted_at", "updated_at")
       .as[(Int, Long, Long)].collect().toSeq
     assert(m2 == Seq((1, 10L, 10L), (2, 10L, 30L), (3, 20L, 20L)))
   }
 
-  test("upsertStamped with latestBy: a rejected stale re-delivery leaves both stamps") {
-    val cur = Transform.stampInitial(
-      Seq((1, "new", "2026-06-01")).toDF("k", "v", "u"), lit(5L))
-    val out = Transform.upsertStamped(cur,
-      Seq((1, "old", "2020-01-01")).toDF("k", "v", "u"),
-      Seq("k"), lit(9L), latestBy = Some("u"))
+  test("stamped merge with latestBy: a rejected stale row leaves both stamps") {
+    val cur = Transform.merge(None,
+      Seq(Seq((1, "new", "2026-06-01")).toDF("k", "v", "u")), Seq("k"), stamp = Some(lit(5L)))
+    val out = Transform.merge(Some(cur),
+      Seq(Seq((1, "old", "2020-01-01")).toDF("k", "v", "u")),
+      Seq("k"), latestBy = Some("u"), stamp = Some(lit(9L)))
       .select("v", "inserted_at", "updated_at")
       .as[(String, Long, Long)].collect().toSeq
     assert(out == Seq(("new", 5L, 5L)),
       "losing batch row must not refresh updated_at")
   }
 
-  test("upsertStamped rejects stamp columns in the updates payload") {
-    val cur = Transform.stampInitial(Seq((1, "a")).toDF("k", "v"), lit(1L))
+  test("stamped merge rejects stamp columns in the updates payload") {
+    val stamped = Transform.merge(None, Seq(Seq((1, "a")).toDF("k", "v")), Seq("k"),
+      stamp = Some(lit(1L)))
     val e = intercept[IllegalArgumentException] {
-      Transform.upsertStamped(cur,
-        Transform.stampInitial(Seq((1, "b")).toDF("k", "v"), lit(2L)),
-        Seq("k"), lit(2L))
+      Transform.merge(Some(stamped), Seq(stamped), Seq("k"), stamp = Some(lit(2L)))
     }
     assert(e.getMessage.contains("payload"))
+  }
+
+  /** Hash exchanges in the final plan of `df`, after running it. */
+  private def hashExchanges(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    df.collect()
+    // AQE plan strings repeat the tree under "== Initial Plan ==" — count
+    // exchanges only in the final section.
+    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    "Exchange hashpartitioning\\(\\w+".r.findAllIn(plan).toSeq
+  }
+
+  /** A 64-key parquet target (k, ts, v, kb) with kb the 8-way key bucket. */
+  private def bucketedTarget(tag: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-merge-$tag").toString + "/t"
+    Seq.tabulate(64)(i => (i.toLong, 10L, s"v$i")).toDF("k", "ts", "v")
+      .withColumn("kb", graft.sources.BucketedTable.bucketOf(Seq("k"), 8))
+      .write.partitionBy("kb").parquet(dir)
+    dir
+  }
+
+  // In-batch duplicate keys and a stale re-delivery: the raw batch the
+  // sinks hand to merge.
+  private def rawBatch = Seq((1L, 20L, "a"), (1L, 20L, "b"), (2L, 30L, "c"),
+    (3L, 5L, "stale")).toDF("k", "ts", "v")
+
+  test("kb-clustered merge of a pruned target and a raw batch: one exchange") {
+    val batch = rawBatch.withColumn("kb", graft.sources.BucketedTable.bucketOf(Seq("k"), 8))
+    val touched = batch.select("kb").distinct().as[Int].collect()
+    val tgt = spark.read.parquet(bucketedTarget("kb"))
+      .filter(col("kb").isin(touched.map(Int.box).toIndexedSeq: _*))
+    val merged = Transform.merge(Some(tgt), Seq(batch), Seq("k"), latestBy = Some("ts"),
+      tieBreakers = Seq("v"), clusterBy = Some(("kb", touched.length)))
+    val ex = hashExchanges(merged)
+    assert(ex == Seq("Exchange hashpartitioning(kb"), s"expected one kb exchange, got $ex")
+  }
+
+  test("raw-batch merge into a full target: one hash exchange, on the key") {
+    val tgt = spark.read.parquet(bucketedTarget("full")).drop("kb")
+    val merged = Transform.merge(Some(tgt), Seq(rawBatch), Seq("k"), latestBy = Some("ts"),
+      tieBreakers = Seq("v"))
+    val ex = hashExchanges(merged)
+    assert(ex == Seq("Exchange hashpartitioning(k"), s"expected one k exchange, got $ex")
+    val byK = merged.as[(Long, Long, String)].collect().map(r => r._1 -> r._3).toMap
+    assert(byK(1L) == "a" && byK(2L) == "c" && byK(3L) == "v3" && byK.size == 64)
   }
 
   test("pipeline hard-fails when a critical column is entirely null") {
