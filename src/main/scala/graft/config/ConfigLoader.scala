@@ -124,11 +124,11 @@ object ConfigLoader {
 
   /** Load from any Hadoop-visible path. */
   def fromJsonFile(spark: SparkSession, path: String): DatasetConfig =
-    fromJsonString(readFile(spark, path))
+    fromJsonString(read(spark, path))
 
   /** Load a YAML config from any Hadoop-visible path. */
   def fromYamlFile(spark: SparkSession, path: String): DatasetConfig =
-    fromYamlString(readFile(spark, path))
+    fromYamlString(read(spark, path))
 
   /** Load by extension: `.yaml`/`.yml` → YAML, anything else JSON. */
   def fromFile(spark: SparkSession, path: String): DatasetConfig =
@@ -136,16 +136,9 @@ object ConfigLoader {
       fromYamlFile(spark, path)
     else fromJsonFile(spark, path)
 
-  private def readFile(spark: SparkSession, path: String): String = {
+  private def read(spark: SparkSession, path: String): String = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      bytes.toString("UTF-8")
-    } finally in.close()
+    graft.sources.Swap.readString(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      .getOrElse(throw new java.io.FileNotFoundException(s"config file $path does not exist"))
   }
 }

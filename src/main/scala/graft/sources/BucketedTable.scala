@@ -28,22 +28,29 @@ import graft.operators.Transform
   * that survives a 100 TB target (numBuckets sized so a bucket is a few
   * GB: 4096 buckets × 25 GB ≈ 100 TB).
   *
-  * Crash contract: per-bucket atomic swap (live → `_old_kb=i` →
-  * staging-in → delete old; `_`-prefixed dirs are invisible to Spark's
-  * listing). A crash mid-merge leaves SOME buckets new and some old —
-  * weaker than the full-table swap, same contract as
-  * [[Sink.compactPartitioned]] — which the idempotent merge heals: the
-  * streaming checkpoint replays the same batch, and re-merging already
-  * merged rows is a content no-op (last-writer-wins; the stamped
-  * variant replays with the same deterministic batch stamp).
-  * [[heal]] runs at the start of every merge and finishes any
-  * interrupted swap rename-by-rename.
+  * Crash contract: the first load is one rename of a staging dir that
+  * already holds the meta file; every later merge commits each touched
+  * bucket with [[Swap.commit]], the old copy of `kb=i` parked as
+  * `.old_kb=i` inside the root (a leading `.` hides it from Spark's
+  * listing; a leading `_` would not, since the name contains `=`). A
+  * crash mid-merge leaves SOME buckets new and some old — weaker than
+  * the full-table swap, same contract as [[Sink.compactPartitioned]] —
+  * which the idempotent merge heals: the streaming checkpoint replays the
+  * same batch, and re-merging already merged rows is a content no-op
+  * (last-writer-wins; the stamped variant replays with the same
+  * deterministic batch stamp). [[heal]] runs at the start of every merge
+  * and closes any interrupted bucket swap. Between the crash and that
+  * heal, [[read]] sees window 2 (new bucket and its old copy) as the new
+  * table, and refuses window 1 (old copy only), which would otherwise
+  * read silently short.
   */
 object BucketedTable {
 
   val BucketCol = "kb"
   private val MetaFile = "_graft_buckets.json"
-  private val OldPrefix = "_old_kb="
+  private val OldPrefix = ".old_kb="
+  /** The old-copy prefix of tables written before it was hidden. */
+  private val LegacyOldPrefix = "_old_kb="
 
   /** Bucket id of a key tuple: non-negative, stable across batches and
     * engines that implement xxhash64 (the portability discipline every
@@ -52,9 +59,23 @@ object BucketedTable {
   def bucketOf(keys: Seq[String], numBuckets: Int): Column =
     pmod(xxhash64(keys.map(col): _*), lit(numBuckets)).cast("int")
 
-  /** The logical table: the physical layout (bucket column) stripped. */
-  def read(spark: SparkSession, targetDir: String): DataFrame =
+  /** The logical table: the physical layout (bucket column) stripped.
+    * Fails while a bucket is caught between its two renames (only its old
+    * copy exists): the table would read short until the next merge heals
+    * it.
+    */
+  def read(spark: SparkSession, targetDir: String): DataFrame = {
+    val (fs, root) = fsRoot(spark, targetDir)
+    if (fs.exists(root)) {
+      val names = fs.listStatus(root).map(_.getPath.getName).toSet
+      val torn = names.flatMap(liveOf).diff(names)
+      if (torn.nonEmpty)
+        throw new java.io.IOException(
+          s"BucketedTable: $targetDir is mid-swap: ${torn.toSeq.sorted.mkString(", ")} " +
+            "exist only as old copies; the next upsert (or heal) restores them")
+    }
     spark.read.parquet(targetDir).drop(BucketCol)
+  }
 
   /** Stored (numBuckets, keys) — None when the target doesn't exist. */
   def meta(spark: SparkSession, targetDir: String): Option[(Int, Seq[String])] = {
@@ -118,9 +139,9 @@ object BucketedTable {
               s"BucketedTable: target $targetDir exists non-empty without " +
                 s"$MetaFile — refusing to overwrite; delete it explicitly " +
                 "or restore the meta file")
-          must(fs.delete(root, true), "delete empty target", targetDir)
+          Swap.drop(fs, root)
         }
-        must(fs.rename(staging, root), "rename .staging -> target", targetDir)
+        Swap.move(fs, staging, root)
 
       case Some((n, storedKeys)) =>
         require(storedKeys == keys,
@@ -146,7 +167,7 @@ object BucketedTable {
           val staging = new Path(targetDir + ".staging")
           fs.delete(staging, true)
           writePreBucketed(merged, staging.toString, maxRecordsPerFile)
-          touched.foreach(k => swapBucket(fs, root, staging, k, targetDir))
+          touched.foreach(k => swapBucket(fs, root, staging, k))
           fs.delete(staging, true)
         }
     }
@@ -158,23 +179,24 @@ object BucketedTable {
     spark.catalog.refreshByPath(targetDir)
   }
 
-  /** Finish any interrupted per-bucket swap: a `_old_kb=i` whose live
-    * `kb=i` is missing is the pre-swap data (restore it); one whose
-    * live dir exists is a completed swap's leftover (drop it).
+  /** Finish any interrupted per-bucket swap with [[Swap.heal]]: an old
+    * copy whose live `kb=i` is missing is the pre-swap data (restore it);
+    * one whose live dir exists is a completed swap's leftover (drop it).
+    * Recognises the `_old_kb=i` name of tables written before the old
+    * copy was hidden. One listing of the root when nothing needs healing.
     */
   def heal(fs: FileSystem, root: Path): Unit = {
     if (!fs.exists(root)) return
     fs.listStatus(root).foreach { s =>
-      val name = s.getPath.getName
-      if (s.isDirectory && name.startsWith(OldPrefix)) {
-        val live = new Path(root, "kb=" + name.stripPrefix(OldPrefix))
-        if (!fs.exists(live)) must(fs.rename(s.getPath, live),
-          s"heal: restore $name", root.toString)
-        else must(fs.delete(s.getPath, true),
-          s"heal: drop completed $name", root.toString)
-      }
+      if (s.isDirectory) liveOf(s.getPath.getName)
+        .foreach(live => Swap.heal(fs, new Path(root, live), s.getPath))
     }
   }
+
+  /** The live bucket dir an old-copy name stands for. */
+  private def liveOf(name: String): Option[String] =
+    Seq(OldPrefix, LegacyOldPrefix).find(name.startsWith)
+      .map(p => "kb=" + name.stripPrefix(p))
 
   // The frame arrives already hash-partitioned on kb (the fused window's
   // explicit repartition — one task per bucket, contiguous files per
@@ -187,18 +209,12 @@ object BucketedTable {
       .partitionBy(BucketCol)
       .mode("overwrite").parquet(dir)
 
-  private def swapBucket(fs: FileSystem, root: Path, staging: Path,
-      k: Int, targetDir: String): Unit = {
-    val live = new Path(root, s"kb=$k")
-    val old = new Path(root, s"$OldPrefix$k")
+  private def swapBucket(fs: FileSystem, root: Path, staging: Path, k: Int): Unit = {
     val stg = new Path(staging, s"kb=$k")
     // A touched bucket always has staged output: the batch had a row in
     // it and the merge never deletes keys.
     require(fs.exists(stg), s"missing staged bucket kb=$k under $staging")
-    if (fs.exists(old)) must(fs.delete(old, true), s"delete stale _old kb=$k", targetDir)
-    if (fs.exists(live)) must(fs.rename(live, old), s"rename kb=$k -> _old", targetDir)
-    must(fs.rename(stg, live), s"rename staged kb=$k into place", targetDir)
-    if (fs.exists(old)) must(fs.delete(old, true), s"delete _old kb=$k", targetDir)
+    Swap.commit(fs, stg, new Path(root, s"kb=$k"), new Path(root, s"$OldPrefix$k"))
   }
 
   private def fsRoot(spark: SparkSession, targetDir: String): (FileSystem, Path) = {
@@ -206,29 +222,19 @@ object BucketedTable {
     (root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
   }
 
-  private def must(ok: Boolean, what: String, target: String): Unit =
-    if (!ok) throw new java.io.IOException(s"BucketedTable: $what failed for $target")
-
-  private def readMeta(fs: FileSystem, root: Path): Option[(Int, Seq[String])] = {
-    val p = new Path(root, MetaFile)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val json = try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
-      new String(bytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
-    // Tiny fixed-shape doc; parsed with the same regex discipline the
-    // RunLog reader uses rather than pulling in a JSON library.
-    val n = """"num_buckets"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toInt)
-      .getOrElse(throw new java.io.IOException(s"bad $MetaFile at $root: $json"))
-    val keys = """"keys"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(json)
-      .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-        .filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
-    Some((n, keys))
-  }
+  private def readMeta(fs: FileSystem, root: Path): Option[(Int, Seq[String])] =
+    Swap.readString(fs, new Path(root, MetaFile)).map { json =>
+      // Tiny fixed-shape doc; parsed with the same regex discipline the
+      // RunLog reader uses rather than pulling in a JSON library.
+      val n = """"num_buckets"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
+        .map(_.group(1).toInt)
+        .getOrElse(throw new java.io.IOException(s"bad $MetaFile at $root: $json"))
+      val keys = """"keys"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(json)
+        .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
+          .filter(_.nonEmpty).toSeq)
+        .getOrElse(Seq.empty)
+      (n, keys)
+    }
 
   private def writeMeta(fs: FileSystem, root: Path, n: Int,
       keys: Seq[String]): Unit = {

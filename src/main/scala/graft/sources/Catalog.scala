@@ -242,10 +242,9 @@ object Catalog {
   def loadCatalogState(spark: SparkSession, statePath: String): Map[String, ResourceMeta] = {
     val p = new Path(statePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StateFiles.heal(fs, p)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val j = JsonMethods.parse(StateFiles.readString(fs, p))
+    Swap.healFile(fs, p)
+    Swap.readString(fs, p).fold(Map.empty[String, ResourceMeta]) { text =>
+      val j = JsonMethods.parse(text)
       (j \ "resources").extractOpt[Map[String, JValue]].getOrElse(Map.empty)
         .map { case (id, v) =>
           id -> ResourceMeta(
@@ -274,7 +273,7 @@ object Catalog {
     val json = "{\n  \"resources\": {\n" + entries.mkString(",\n") + "\n  }\n}\n"
     val p = new Path(statePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StateFiles.atomicWrite(fs, p, json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    Swap.writeFile(fs, p)(_.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
   }
 
   private def jstr(s: String): String =

@@ -48,22 +48,18 @@ object Ingest {
   def loadState(spark: SparkSession, statePath: String): IngestState = {
     val p = new Path(statePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StateFiles.heal(fs, p)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      try {
-        val props = new java.util.Properties()
-        props.load(in)
-        val out = mutable.Map.empty[String, Long]
-        props.forEach((k, v) => out(k.toString) = v.toString.toLong)
-        out.toMap
-      } finally in.close()
+    Swap.healFile(fs, p)
+    Swap.readString(fs, p).fold(Map.empty[String, Long]) { text =>
+      val props = new java.util.Properties()
+      props.load(new java.io.StringReader(text))
+      val out = mutable.Map.empty[String, Long]
+      props.forEach((k, v) => out(k.toString) = v.toString.toLong)
+      out.toMap
     }
   }
 
   /** Atomic state promotion (reference etl/load.py:534-606,
-    * `_promote_state_atomic`, via [[StateFiles.atomicWriteWith]]): the new
+    * `_promote_state_atomic`, via [[Swap.writeFile]]): the new
     * state is fully written to `.tmp` first, then promoted by rename, so
     * a crash at any point leaves either the previous complete state, a
     * recoverable `.old` (healed by the next load/save), or the new
@@ -74,7 +70,7 @@ object Ingest {
   def saveState(spark: SparkSession, statePath: String, state: IngestState): Unit = {
     val p = new Path(statePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StateFiles.atomicWriteWith(fs, p) { out =>
+    Swap.writeFile(fs, p) { out =>
       val props = new java.util.Properties()
       state.foreach { case (k, v) => props.setProperty(k, v.toString) }
       props.store(out, "graft ingest state")

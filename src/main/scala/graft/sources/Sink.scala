@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -49,54 +50,62 @@ object Sink {
     * appends, where a directory of thousands of KB-sized part files
     * destroys listing and scan times. Sizes the output from the INPUT'S
     * ACTUAL BYTES (ceil(totalBytes / targetBytes) files, so compaction is
-    * idempotent and never re-fragments), rewrites, and swaps atomically:
-    * the new files land in a temp dir, the old dir is renamed aside, the
-    * temp renamed in, and only then is the old data deleted — a reader
-    * never observes a half-written dataset, and a crash leaves either the
-    * old or the new complete copy. Returns (filesBefore, filesAfter,
-    * bytesBefore).
+    * idempotent and never re-fragments), rewrites into the hidden sibling
+    * `.<name>.compact_tmp`, and promotes it with [[Swap.commit]], the old
+    * files parked in `.<name>.compact_old` until the new ones are in
+    * place. Both working dirs start with `.`, so a reader of the parent
+    * (a partitioned root, when `path` is one of its leaves) never lists
+    * them. A crash leaves either a complete copy at `path` or, between
+    * the two renames, only the old copy: `path` is then missing, so a read
+    * of it fails rather than returning a partial dataset, and the heal at
+    * the start of the next `compact` of `path` (or [[compactPartitioned]]'s
+    * walk, before it reads the leaf) restores it. Returns (filesBefore,
+    * filesAfter, bytesBefore).
     */
   def compact(df: DataFrame, path: String,
       targetBytes: Long = 128L << 20): (Int, Int, Long) = {
-    val spark = df.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(hconf)
+    val p = new Path(path)
+    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val old = working(p, "old")
+    Swap.heal(fs, p, old)
     val parts = fs.listStatus(p).toIndexedSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     val bytes = parts.map(_.getLen).sum
     val nOut = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".__compact_tmp")
-    val old = new org.apache.hadoop.fs.Path(path + ".__compact_old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    df.repartition(nOut).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // Swap: two renames bracket the only unsafe instant; both are
-    // metadata-only on HDFS-like stores.
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"compact: cannot move $p aside")
-    if (!fs.rename(tmp, p)) {
-      fs.rename(old, p) // restore
-      throw new java.io.IOException(s"compact: cannot move $tmp into place")
-    }
-    fs.delete(old, true)
+    val staged = working(p, "tmp")
+    fs.delete(staged, true)
+    df.repartition(nOut).write.mode(SaveMode.Overwrite).parquet(staged.toString)
+    Swap.commit(fs, staged, p, old)
     (parts.length, nOut, bytes)
   }
 
   /** [[compact]] for a hive-partitioned dataset: every leaf partition
     * directory compacts independently (its own byte-derived file count,
-    * its own atomic swap), so a reader mid-maintenance sees each
-    * partition either fully old or fully new — and a huge backlog can be
-    * compacted partition-by-partition across maintenance windows.
-    * Returns per-partition (relativeDir, filesBefore, filesAfter).
+    * its own [[Swap.commit]]), so a huge backlog can be compacted
+    * partition-by-partition across maintenance windows. A reader of the
+    * root mid-maintenance sees every partition complete, old or new,
+    * except for the one leaf between its two renames, whose rows are
+    * missing from that instant's listing. The walk skips the hidden
+    * working dirs and first heals any leaf a crashed compaction left
+    * between its renames, so it converges on the next call. Returns
+    * per-partition (relativeDir, filesBefore, filesAfter).
     */
   def compactPartitioned(spark: org.apache.spark.sql.SparkSession,
       path: String, targetBytes: Long = 128L << 20): Seq[(String, Int, Int)] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(hconf)
-    def leafDirs(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-      val kids = fs.listStatus(p).toIndexedSeq
-      val dirs = kids.filter(_.isDirectory).map(_.getPath)
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def leafDirs(p: Path): Seq[Path] = {
+      val dirs = fs.listStatus(p).toIndexedSeq.filter(_.isDirectory).map(_.getPath)
+        .flatMap { d =>
+          d.getName match {
+            case OldCopy(leaf) =>
+              val live = new Path(d.getParent, leaf)
+              Swap.heal(fs, live, d)
+              Some(live)
+            case n if n.startsWith(".") => None
+            case _ => Some(d)
+          }
+        }.distinct
       if (dirs.isEmpty) Seq(p) else dirs.flatMap(leafDirs)
     }
     val rootUri = root.toUri.getPath
@@ -108,6 +117,12 @@ object Sink {
       (leaf.toUri.getPath.stripPrefix(rootUri).stripPrefix("/"), nb, na)
     }
   }
+
+  /** A hidden sibling of `p` that [[compact]] works in. */
+  private def working(p: Path, what: String): Path =
+    new Path(p.getParent, s".${p.getName}.compact_$what")
+
+  private val OldCopy = """\.(.+)\.compact_old""".r
 
   /** Artifact write with an oversize manifest (reference etl/load.py's
     * artifact upload: artifacts beyond the size cap are recorded as a

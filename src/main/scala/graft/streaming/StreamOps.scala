@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Transform
+import graft.sources.Swap
 
 /** Structured Streaming analogs of the reference's incremental ETL
   * (SURVEY.md §2.4).
@@ -286,11 +287,9 @@ object StreamOps {
     * Some(n))`), which confines each merge to the key-hash buckets the
     * batch touches.
     *
-    * Swap order is crash-recoverable: target → .old, staging → target,
-    * delete .old; a crash window leaves either the old target or a
-    * recoverable `.old` (healed on the next call). True atomicity needs a
-    * transactional table format — on object stores rename is copy+delete,
-    * so widen the maintenance window accordingly.
+    * The swap is [[Swap.commit]] via [[mergeIntoParquet]]: a crash
+    * leaves either a complete target or a recoverable `.old`, healed on
+    * the next call.
     */
   def upsertIntoParquet(batch: DataFrame, targetDir: String,
       keys: Seq[String], latestBy: Option[String] = None,
@@ -670,9 +669,6 @@ object StreamOps {
     */
   private def lshCleanup(fs: org.apache.hadoop.fs.FileSystem,
       targetDir: String, visible: Seq[(Long, Long)], hi: Long): Unit = {
-    def must(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(
-        s"lshPairsSink: cleanup $what failed under $targetDir")
     val keep = visible.toSet
     fs.listStatus(new Path(targetDir)).map(_.getPath).foreach { p =>
       val dead = p.getName match {
@@ -681,7 +677,8 @@ object StreamOps {
         case lshTailRx(_, i) => i.toLong <= hi
         case _ => false
       }
-      if (dead) must(fs.delete(p, true), s"delete ${p.getName}")
+      if (dead) Swap.must(fs.delete(p, true),
+        s"lshPairsSink: cleanup delete ${p.getName} under $targetDir")
     }
   }
 
@@ -1042,12 +1039,11 @@ object StreamOps {
 
   /** Shared merge-and-swap skeleton: heal a half-finished previous swap,
     * build the merged frame (given whether a target exists), write it to
-    * staging, run `preCommit`, then swap. Swap order is crash-recoverable:
-    * target → .old, staging → target, delete .old; a crash window leaves
-    * either the old target or a recoverable `.old` (healed on the next
-    * call). True atomicity needs a transactional table format — on object
-    * stores rename is copy+delete, so widen the maintenance window
-    * accordingly.
+    * `<target>.staging`, run `preCommit`, then promote it with
+    * [[Swap.commit]], the previous target parked as `<target>.old`. Both
+    * working dirs are siblings of the target, outside what a reader of it
+    * lists; a crash leaves either a complete target or a `.old` the next
+    * call heals (while the target is missing, reading it fails loudly).
     *
     * `preCommit` runs after the staging write and before the first rename:
     * a check over what that write observed (e.g. `Dataset.observe`
@@ -1057,25 +1053,15 @@ object StreamOps {
       preCommit: () => Unit = () => ())(
       merge: (org.apache.spark.sql.SparkSession, Boolean) => DataFrame): Unit = {
     val spark = batch.sparkSession
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
     val target = new Path(targetDir)
+    val staged = new Path(targetDir + ".staging")
     val old = new Path(targetDir + ".old")
-    val fs = target.getFileSystem(hadoopConf)
-    // Hadoop rename/delete report failure by RETURNING false — every step
-    // must be checked or a failed rename cascades into deleting the only
-    // copy of the data.
-    def must(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(s"mergeIntoParquet: $what failed for $targetDir")
-    // Heal a crash between the two renames of a previous call.
-    if (!fs.exists(target) && fs.exists(old)) must(fs.rename(old, target), "heal .old -> target")
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Swap.heal(fs, target, old)
     val merged = merge(spark, fs.exists(target))
-    val tmp = new Path(targetDir + ".staging")
-    merged.write.mode("overwrite").parquet(tmp.toString)
+    merged.write.mode("overwrite").parquet(staged.toString)
     try preCommit()
-    catch { case e: Throwable => fs.delete(tmp, true); throw e }
-    if (fs.exists(old)) must(fs.delete(old, true), "delete stale .old")
-    if (fs.exists(target)) must(fs.rename(target, old), "rename target -> .old")
-    must(fs.rename(tmp, target), "rename .staging -> target")
-    if (fs.exists(old)) must(fs.delete(old, true), "delete .old")
+    catch { case e: Throwable => fs.delete(staged, true); throw e }
+    Swap.commit(fs, staged, target, old)
   }
 }

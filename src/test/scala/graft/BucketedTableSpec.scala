@@ -145,20 +145,48 @@ class BucketedTableSpec extends AnyFunSuite {
       .filter(_.getPath.getName.startsWith("kb=")).map(_.getPath)
     val b0 = buckets.head; val k0 = b0.getName.stripPrefix("kb=")
     val before = sortedRows(BucketedTable.read(spark, bt))
-    // Window 1: live renamed aside, staged not yet in — heal restores.
-    assert(fs.rename(b0, new Path(new Path(bt), s"_old_kb=$k0")))
-    BucketedTable.heal(fs, new Path(bt))
-    assert(fs.exists(b0))
-    assert(sortedRows(BucketedTable.read(spark, bt)) == before)
-    // Window 2: swap completed but _old not yet deleted — heal drops it.
-    val oldCopy = new Path(new Path(bt), s"_old_kb=$k0")
-    assert(org.apache.hadoop.fs.FileUtil.copy(fs, b0, fs, oldCopy, false,
+    // Both old-copy names: the hidden one, and the `_old_kb=` one a table
+    // that crashed before the old copy was hidden still carries.
+    for (prefix <- Seq(".old_kb=", "_old_kb=")) {
+      val oldCopy = new Path(new Path(bt), s"$prefix$k0")
+      // Window 1: live renamed aside, staged not yet in — heal restores.
+      assert(fs.rename(b0, oldCopy))
+      BucketedTable.heal(fs, new Path(bt))
+      assert(fs.exists(b0) && !fs.exists(oldCopy))
+      assert(sortedRows(BucketedTable.read(spark, bt)) == before)
+      // Window 2: swap completed but the old copy not yet deleted — heal
+      // drops it.
+      assert(org.apache.hadoop.fs.FileUtil.copy(fs, b0, fs, oldCopy, false,
+        spark.sparkContext.hadoopConfiguration))
+      BucketedTable.heal(fs, new Path(bt))
+      assert(!fs.exists(oldCopy) && fs.exists(b0))
+      assert(sortedRows(BucketedTable.read(spark, bt)) == before)
+    }
+  }
+
+  test("a read before any heal: window 2 reads the merged rows, window 1 fails loudly") {
+    val bt = tmp("read-mid")
+    BucketedTable.upsert(Seq.tabulate(100)(i => (i.toLong, i)).toDF("k", "v"),
+      bt, Seq("k"), numBuckets = 8)
+    BucketedTable.upsert(Seq.tabulate(100)(i => (i.toLong, -i)).toDF("k", "v"),
+      bt, Seq("k"), numBuckets = 8)
+    val merged = sortedRows(BucketedTable.read(spark, bt))
+    val fs = new Path(bt).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = fs.listStatus(new Path(bt))
+      .filter(_.getPath.getName.startsWith("kb=")).map(_.getPath).head
+    val oldCopy = new Path(new Path(bt), ".old_kb=" + live.getName.stripPrefix("kb="))
+    // Window 2: the bucket is live and an old copy still sits beside it.
+    // A leak of the old copy into the read would duplicate its rows.
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, live, fs, oldCopy, false,
       spark.sparkContext.hadoopConfiguration))
+    assert(sortedRows(BucketedTable.read(spark, bt)) == merged)
+    // Window 1: only the old copy exists. A read would miss the bucket's
+    // rows, so it fails and names the bucket instead.
+    assert(fs.delete(live, true))
+    val e = intercept[java.io.IOException](BucketedTable.read(spark, bt))
+    assert(e.getMessage.contains(live.getName), e.getMessage)
     BucketedTable.heal(fs, new Path(bt))
-    assert(!fs.exists(oldCopy) && fs.exists(b0))
-    assert(sortedRows(BucketedTable.read(spark, bt)) == before)
-    // And the `_old` dir never leaks into a plain read (underscore dirs
-    // are invisible to Spark's listing) — covered by the equality above.
+    assert(BucketedTable.read(spark, bt).count() == 100)
   }
 
   test("re-merging the same batch is a content no-op (crash-replay idempotence)") {

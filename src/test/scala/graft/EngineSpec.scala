@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -145,8 +147,9 @@ class EngineSpec extends AnyFunSuite {
       graft.sources.Sink.compact(spark.read.parquet(dir), dir, 1L << 30)
     assert(nb2 == 1 && na2 == 1)
     // no working dirs left behind
-    assert(!new java.io.File(dir + ".__compact_tmp").exists())
-    assert(!new java.io.File(dir + ".__compact_old").exists())
+    val parent = new java.io.File(dir).getParent
+    assert(!new java.io.File(parent, ".ds.compact_tmp").exists())
+    assert(!new java.io.File(parent, ".ds.compact_old").exists())
   }
 
   test("compaction of a hive-partitioned dataset: per-partition, reads intact") {
@@ -162,6 +165,34 @@ class EngineSpec extends AnyFunSuite {
     assert(back.filter(col("part") === 1).count() == 300)
     assert(new java.io.File(dir + "/part=2").listFiles()
       .count(_.getName.endsWith(".parquet")) == 1)
+  }
+
+  test("a leftover compaction working dir does not change what the partitioned root reads") {
+    val dir = Files.createTempDirectory("graft-compact-left").toString + "/ds"
+    Seq.tabulate(9)(i => (i.toLong, i % 3)).toDF("id", "part")
+      .repartition(3).write.partitionBy("part").parquet(dir)
+    def rows() = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    val want = rows()
+    val root = new java.io.File(dir)
+    val before = root.list().toSet
+    // Compact one leaf while a watcher notes every name that appears in
+    // the root: the working dirs are among them. They live for the whole
+    // staging write job, far longer than one listing.
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val compacting = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val watcher = new Thread(() => while (compacting.get) root.list().foreach(seen.add))
+    watcher.start()
+    val leaf = dir + "/part=1"
+    try graft.sources.Sink.compact(spark.read.parquet(leaf), leaf, 1L << 30)
+    finally { compacting.set(false); watcher.join() }
+    val working = seen.asScala.toSet -- before
+    assert(working.nonEmpty, "the staging write made no dir in the root")
+    // A crash after the staging write leaves a full copy of the leaf there.
+    working.foreach(w => org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(leaf), new java.io.File(root, w)))
+    assert(rows() == want)
+    assert(spark.read.parquet(dir).schema("part").dataType ==
+      org.apache.spark.sql.types.IntegerType)
   }
 
   test("artifact write emits an oversize manifest listing every part") {

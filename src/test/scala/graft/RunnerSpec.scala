@@ -255,6 +255,8 @@ class RunnerSpec extends AnyFunSuite {
     Runner.run(spark, Map("res" -> seed), cfg, target, base + "/a", "run_0")
     // The state a crash leaves after `target -> .old` and before `.staging -> target`.
     Files.move(Paths.get(target), Paths.get(target + ".old"))
+    // Until that run heals it, a read of the target fails instead of reading the old copy.
+    intercept[org.apache.spark.sql.AnalysisException](spark.read.parquet(target))
     Runner.run(spark, Map("res" -> next), cfg, target, base + "/a", "run_1")
     assert(!exists(target + ".old"))
     assert(tableRows(target) == tableRows(clean + "/t"))
