@@ -1,9 +1,10 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Transform
 import graft.sources.Swap
@@ -637,6 +638,32 @@ object StreamOps {
   private val lshRunRx = """^(cbands|csigs|cinc)_(\d+)_(\d+)$""".r
   private val lshDoneRx = """^cdone_(\d+)_(\d+)$""".r
 
+  // Each family's file schema, declared once and keyed by the family name
+  // the two regexes capture. Every read of the index's own files passes
+  // it, so no root costs a schema-inference job. A band run left in the
+  // earlier hive `pb=<i>` layout reads through the same schema: partition
+  // discovery fills `pb` from its directory names.
+  private[graft] val lshSchema: Map[String, StructType] = {
+    val sigs = "doc_id LONG, sig ARRAY<LONG>"
+    val inc = "b INT, k1 LONG, k2 LONG, id_a LONG, id_b LONG"
+    Map("sigs" -> sigs, "csigs" -> sigs, "inc" -> inc, "cinc" -> inc,
+      "bands" -> "doc_id LONG, b INT, k1 LONG, k2 LONG, pb INT",
+      "cbands" -> "doc_id LONG, b INT, k1 LONG, k2 LONG, src_batch LONG, pb INT")
+      .map { case (f, ddl) => f -> StructType.fromDDL(ddl) }
+  }
+
+  /** `roots` of one index family, each read with the family's schema and
+    * unioned; no roots read as an empty frame of that schema. One read per
+    * root: a hive run beside flat roots in one read call would break
+    * partition discovery.
+    */
+  private def lshRead(spark: SparkSession, family: String,
+      roots: Seq[String]): DataFrame =
+    if (roots.isEmpty)
+      spark.createDataFrame(java.util.List.of[Row](), lshSchema(family))
+    else roots.map(spark.read.schema(lshSchema(family)).parquet(_))
+      .reduce(_.unionByName(_))
+
   /** Compacted-run discovery for [[lshPairsSink]]/[[lshPairsRead]]:
     * marker-gated batch ranges. A run `c*_<lo>_<hi>` is DONE iff its
     * `cdone_<lo>_<hi>` marker exists (written only after all three
@@ -682,6 +709,25 @@ object StreamOps {
     }
   }
 
+  /** Band postings, written the same way everywhere (per-batch tail, L0
+    * fold, tier merge): ONE directory, range-partitioned and sorted on
+    * pb, so the probe's static `pb IN (...)` prunes at row-group
+    * granularity from the footers. A hive `pb=<i>` tree would prune
+    * whole directories instead, but costs numBands·keyBuckets (1024 at
+    * the default keyBuckets 64) directory commits per write and as many
+    * listings per read, and it prunes little: a batch of d documents
+    * touches about 1 − e^(−d/keyBuckets) of the pb values. Measured with
+    * [[graft.LshFlatnessProbe]] (24 batches, compactEvery 4, tierFanout
+    * 2, keyBuckets 64, 4-core host), hive runs against flat ones: 208
+    * documents per batch (sf0.1, 94-97% of pb touched) 195 s against
+    * 71 s, every batch after the first hive run 12-36 s against 2-3 s;
+    * 21 documents per batch (sf0.01, 27-29% touched, where directory
+    * pruning should pay most) 137 s against 63 s.
+    */
+  private def writeBands(df: DataFrame, dest: String): Unit =
+    df.repartitionByRange(col("pb")).sortWithinPartitions(col("pb"))
+      .write.mode("overwrite").parquet(dest)
+
   /** One tier-merge sweep for [[lshPairsSink]]'s LSM-shaped fold: while
     * `fanout` adjacent visible runs share a size class (size classes are
     * geometric — class t covers spans in [u·fanout^t, u·fanout^(t+1))
@@ -697,31 +743,6 @@ object StreamOps {
     * same versioned-swap way as the L0 fold: overwrite the wide run's
     * three dirs, marker LAST, sweep the narrow runs after.
     */
-  /** Compacted-band run layout by SPAN (r16, measured): a hive
-    * `pb=...` tree costs ~numBands·keyBuckets (≈1024) directory creates
-    * + commits per write and as many listings per read — the same
-    * sf-independent constant the r15 per-batch tails escaped, but every
-    * L0 fold and tier merge was still paying it (the sf1 flatness probe
-    * put the tiered fold at 1.4–2.2× the r14 single-generation fold's
-    * WALL time even while writing fewer bytes — all fixed cost). Small
-    * runs therefore write ONE pb-range-sorted dir: the probe's static
-    * `pb IN (...)` prunes at row-group granularity from the footers,
-    * and the run is rewritten within ≤ 2 tier climbs anyway. Runs at or
-    * past `compactEvery·fanout²` batches keep the hive layout — there
-    * directory pruning reads NOTHING from unprobed partitions and the
-    * run is long-lived, so the one-time dir-commit cost amortizes.
-    * Readers are layout-agnostic: `pb` is a filterable column either
-    * way (data column when sorted, partition column when hived).
-    */
-  private def writeCbands(df: DataFrame, dest: String, spanBatches: Long,
-      compactEvery: Int, fanout: Int): Unit =
-    if (spanBatches >= compactEvery.toLong * fanout * fanout)
-      df.repartition(col("pb")).write.mode("overwrite")
-        .partitionBy("pb").parquet(dest)
-    else
-      df.repartitionByRange(col("pb")).sortWithinPartitions(col("pb"))
-        .write.mode("overwrite").parquet(dest)
-
   private def lshMergeTiers(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, targetDir: String,
       compactEvery: Int, fanout: Int): Unit = {
@@ -739,17 +760,14 @@ object StreamOps {
           w.size == fanout && w.map(sizeClass).distinct.size == 1)
         .foreach { w =>
           val (lo, hi) = (w.head._1, w.last._2)
-          def merge(prefix: String): Unit = {
-            val all = w.map { case (l, h) =>
-                spark.read.parquet(s"$targetDir/$prefix${l}_$h") }
-              .reduce(_.unionByName(_))
-            if (prefix == "cbands_")
-              writeCbands(all, s"$targetDir/$prefix${lo}_$hi",
-                hi - lo + 1, compactEvery, fanout)
-            else all.write.mode("overwrite")
-              .parquet(s"$targetDir/$prefix${lo}_$hi")
+          def merge(family: String): Unit = {
+            val all = lshRead(spark, family,
+              w.map { case (l, h) => s"$targetDir/${family}_${l}_$h" })
+            val dest = s"$targetDir/${family}_${lo}_$hi"
+            if (family == "cbands") writeBands(all, dest)
+            else all.write.mode("overwrite").parquet(dest)
           }
-          merge("cbands_"); merge("csigs_"); merge("cinc_")
+          merge("cbands"); merge("csigs"); merge("cinc")
           fs.create(new Path(s"$targetDir/cdone_${lo}_$hi"), true).close()
           lshFoldSpans.updateWith(targetDir)(p =>
             Some(p.getOrElse(0L) + (hi - lo + 1)))
@@ -768,11 +786,11 @@ object StreamOps {
     * its portable signatures and band postings as batchId-keyed
     * OVERWRITES (idempotent under at-least-once replay — a plain
     * `append` to one index tree would double postings on a batch
-    * re-run), the posting files hive-partitioned by
+    * re-run), the posting files range-partitioned and sorted on
     * `pb = band·keyBuckets + (k1 mod keyBuckets)` so the probe against
-    * the standing corpus reads ONLY the partitions the batch's own band
-    * keys touch (a static `pb IN (...)` filter — the standing corpus is
-    * never rescanned; the LshIndex partition-pruning discipline).
+    * the standing corpus reads ONLY the row groups the batch's own band
+    * keys touch (a static `pb IN (...)` filter pruned from the parquet
+    * footers — the standing corpus is never rescanned).
     *
     * Pair emission is EXACT against the one-shot batch query over the
     * union, for any batch boundaries and any arrival order (pairs are
@@ -787,7 +805,7 @@ object StreamOps {
     *
     * LONG-RUN posture — a TIERED (LSM-shaped) fold: every
     * `compactEvery` batches the per-batch snapshots fold into a NEW L0
-    * run `cbands_<lo>_<hi>` (hive-partitioned by pb, so the pruned
+    * run `cbands_<lo>_<hi>` (pb-sorted like the tails, so the pruned
     * probe holds at any stream age) + `csigs_/cinc_<lo>_<hi>`, gated by
     * a `cdone_<lo>_<hi>` marker written only after all three land; the
     * folded tails are then deleted. When `tierFanout` adjacent runs
@@ -833,8 +851,8 @@ object StreamOps {
         val hi = visible0.map(_._2).foldLeft(-1L)(math.max)
         if (fs.exists(new Path(targetDir)))
           lshCleanup(fs, targetDir, visible0, hi)
-        val sigs = graft.operators.Materialize(
-          graft.queries.TextQueries.portableMinhashSig(batch))
+        // Already a local checkpoint: the batch is hashed once.
+        val sigs = graft.queries.TextQueries.portableMinhashSig(batch)
         // A folded batch's replay still overwrites its own snapshots
         // (idempotent, deterministic) — readers ignore ids ≤ hi, so the
         // strays are dead weight until the next cleanup, never input.
@@ -843,17 +861,7 @@ object StreamOps {
           graft.queries.TextQueries.portableBands(sigs)
             .withColumn("pb", (col("b").cast("long") * keyBuckets +
               pmod(col("k1"), lit(keyBuckets.toLong))).cast("int")))
-        // Per-batch tail snapshot: ONE parquet dir, range-partitioned and
-        // sorted on pb, so the probe's static `pb IN (...)` prunes at ROW
-        // GROUP granularity from the footers. The hive-partitioned
-        // `pb=...` layout here cost ~1024 directory creates + commits PER
-        // BATCH and as many listings per probe/publish — measured as the
-        // bulk of the gate's sf-independent ~34 s stream constant; the
-        // long-lived pruning layout belongs to the folded generation
-        // (cbands_, still hive-partitioned), not the short-lived tails.
-        bands.repartitionByRange(col("pb"))
-          .sortWithinPartitions(col("pb"))
-          .write.mode("overwrite").parquet(s"$targetDir/bands_$batchId")
+        writeBands(bands, s"$targetDir/bands_$batchId")
         // L0 fold due? Covers batches hi+1..batchId-1 (never the current
         // batch: the probe's prior-corpus join excludes own postings, and
         // a compacted run containing them would self-pair).
@@ -872,22 +880,20 @@ object StreamOps {
           // An L0 run folds ONLY the tails — never the standing runs;
           // standing-run rewrites happen one tier at a time in
           // lshMergeTiers (the O(N log N) contract).
-          writeCbands(
+          writeBands(
             tail("bands_").map { case (i, p) =>
-                spark.read.parquet(p)
+                lshRead(spark, "bands", Seq(p))
                   .select(col("doc_id"), col("b"), col("k1"), col("k2"),
                     lit(i).as("src_batch"), col("pb"))
               }
               .reduce(_.unionByName(_)),
-            s"$targetDir/cbands_${lo}_$newHi", newHi - lo + 1,
-            compactEvery, tierFanout)
-          def foldPlain(prefix: String, cname: String): Unit =
-            tail(prefix).map { case (_, p) => spark.read.parquet(p) }
-              .reduce(_.unionByName(_))
+            s"$targetDir/cbands_${lo}_$newHi")
+          def foldPlain(family: String): Unit =
+            lshRead(spark, family, tail(s"${family}_").map(_._2))
               .write.mode("overwrite")
-              .parquet(s"$targetDir/$cname${lo}_$newHi")
-          foldPlain("sigs_", "csigs_")
-          foldPlain("inc_", "cinc_")
+              .parquet(s"$targetDir/c${family}_${lo}_$newHi")
+          foldPlain("sigs")
+          foldPlain("inc")
           // Marker LAST: the new run becomes visible atomically; then
           // sweep the folded tails.
           fs.create(new Path(s"$targetDir/cdone_${lo}_$newHi"), true).close()
@@ -920,22 +926,21 @@ object StreamOps {
         }
         val pbs = bands.select("pb").distinct().collect()
           .map(_.getInt(0)).sorted
-        // Per-root reads + union (multiple hive-partitioned roots in one
-        // read call break partition inference); the static pb filter
-        // prunes each root's directory listing independently. The
-        // src_batch < batchId cut is a no-op in forward progress and the
-        // exact prior-corpus reconstruction when a FOLDED batch replays
+        // Per-root reads + union (lshRead); the static pb filter prunes
+        // each root's row groups independently. The src_batch < batchId
+        // cut is a no-op in forward progress and the exact prior-corpus
+        // reconstruction when a FOLDED batch replays
         // (hiNow ≥ batchId: fresh checkpoint over an intact folded
         // target — the standing runs hold more than this batch's past;
         // runs entirely at/after this batch are skipped outright).
         val priorParts =
           runsNow.filter(_._1 < batchId).map { case (lo, h) =>
-            spark.read.parquet(s"$targetDir/cbands_${lo}_$h")
+            lshRead(spark, "cbands", Seq(s"$targetDir/cbands_${lo}_$h"))
               .filter(col("pb").isin(pbs.map(Int.box): _*))
               .filter(col("src_batch") < batchId)
               .select("doc_id", "b", "k1", "k2")
           } ++
-          tailDirs.map(spark.read.parquet(_)
+          tailDirs.map(p => lshRead(spark, "bands", Seq(p))
             .filter(col("pb").isin(pbs.map(Int.box): _*))
             .select("doc_id", "b", "k1", "k2"))
         recordProbeRoots(targetDir, batchId, priorParts.size)
@@ -986,41 +991,42 @@ object StreamOps {
     * hit FileNotFoundException on the swept paths mid-scan. Publish
     * between stream stops (the AvailableNow discipline every caller
     * here uses), or retry on a fresh listing.
+    *
+    * A target no batch has written (an AvailableNow run over an empty
+    * drop directory starts none) publishes an empty frame of the same
+    * schema, as the batch twin does over an empty corpus.
     */
   def lshPairsRead(spark: SparkSession, targetDir: String,
       maxBucket: Int = 100, minAgree: Int = 16): DataFrame = {
     val bkt = Seq("b", "k1", "k2")
-    val fs = new Path(targetDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dir = new Path(targetDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val runs = lshVisibleRuns(fs, targetDir)
     val hi = runs.map(_._2).foldLeft(-1L)(math.max)
+    val names =
+      if (fs.exists(dir)) fs.listStatus(dir).map(_.getPath.getName).toSeq
+      else Nil
     // Visible tiered runs + live tails (id > hi) per family —
     // log-bounded root count at any stream age, and replay strays
     // (re-written snapshots of folded batches) are invisible by the
     // same cut. Non-managed names under targetDir are skipped, not
     // parsed.
-    def family(prefix: String, cname: String): Seq[String] = {
-      val tails = fs.listStatus(new Path(targetDir)).map(_.getPath).toSeq
-        .filter(p => p.getName match {
-          case lshTailRx(f, i) => f + "_" == prefix && i.toLong > hi
-          case _ => false
-        }).map(_.toString)
-      runs.map { case (lo, h) => s"$targetDir/$cname${lo}_$h" } ++ tails
+    def family(f: String): DataFrame = {
+      val tails = names.collect {
+        case n @ lshTailRx(`f`, i) if i.toLong > hi => s"$targetDir/$n" }
+      lshRead(spark, "c" + f,
+          runs.map { case (lo, h) => s"$targetDir/c${f}_${lo}_$h" })
+        .select(lshSchema(f).fieldNames.map(col): _*)
+        .unionByName(lshRead(spark, f, tails))
     }
-    val occOk = family("bands_", "cbands_")
-      .map(spark.read.parquet(_).select(bkt.map(col): _*))
-      .reduce(_.unionByName(_))
+    val occOk = family("bands")
       .groupBy(bkt.map(col): _*).agg(count(lit(1)).as("occ"))
       .filter(col("occ") <= maxBucket)
       .select(bkt.map(col): _*)
-    val pairs = family("inc_", "cinc_")
-      .map(spark.read.parquet(_))
-      .reduce(_.unionByName(_))
+    val pairs = family("inc")
       .join(occOk, bkt)
       .select("id_a", "id_b").distinct()
-    val sigs = family("sigs_", "csigs_")
-      .map(spark.read.parquet(_))
-      .reduce(_.unionByName(_))
+    val sigs = family("sigs")
     val pk = lit(10000000000L)
     pairs
       .join(sigs.toDF("id_a", "sa"), "id_a")

@@ -1,7 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -44,6 +48,70 @@ class StreamingSpec extends AnyFunSuite {
     partFiles().filterNot(f => firstNames(f.getName)).foreach { f =>
       require(f.setLastModified(firstMax + 60000L), s"mtime stamp failed: $f")
     }
+  }
+
+  /** Stage drops `is` of an `n`-way doc_id split of `docs` into `dropD`,
+    * one single-file drop each, stamped with strictly increasing mtimes so
+    * the file source batches them in order (the gate is order-insensitive;
+    * the stamps only pin the batch count and order).
+    */
+  private def stageDocDrops(docs: org.apache.spark.sql.DataFrame,
+      dropD: String, n: Int, is: Range): Unit = {
+    def parts() = Option(new java.io.File(dropD).listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
+    is.foreach { i =>
+      val before = parts()
+      docs.filter(pmod(col("doc_id"), lit(n.toLong)) === i)
+        .coalesce(1).write.mode("append").parquet(dropD)
+      (parts() -- before).foreach { f =>
+        require(new java.io.File(s"$dropD/$f")
+          .setLastModified(1700000000000L + i * 60000L), s"mtime stamp failed for $f")
+      }
+    }
+  }
+
+  /** Runs `body` and returns its result with the number of Spark jobs it
+    * started on this thread (RunnerSpec's `traced`, jobs only).
+    */
+  private def countingJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"streaming-spec-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case g if g == group => jobs.incrementAndGet()
+          case g if g == group + "-drain" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "code under test")
+      val out = body
+      // Once the drain job's start is delivered, every event `body`
+      // posted has been too (one ordered listener queue).
+      sc.setJobGroup(group + "-drain", "drain")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Every directory under `root` named `pb=<i>`: the hive layout the
+    * LSH index no longer writes.
+    */
+  private def hiveDirs(root: String): Seq[String] = {
+    val walk = Files.walk(java.nio.file.Paths.get(root))
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(p => Files.isDirectory(p) &&
+        p.getFileName.toString.startsWith("pb=")).map(_.toString).toSeq
+    } finally walk.close()
   }
 
   test("streaming Count-Min sketch equals the batch sketch over all drops") {
@@ -415,7 +483,11 @@ class StreamingSpec extends AnyFunSuite {
     * output against.
     */
   private def oneShotLshFlags(
-      docs: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] = {
+      docs: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] =
+    oneShotLshFrame(docs).orderBy("id").collect().toSeq
+
+  private def oneShotLshFrame(
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val sig = graft.queries.TextQueries.portableMinhashSig(docs)
     val bands = graft.queries.TextQueries.portableBands(sig)
     val capped = bands.join(
@@ -439,7 +511,6 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("id"), col("n_matches"),
         pmod(col("best"), pk).as("best_match"),
         expr("best DIV 10000000000").as("best_n_eq"))
-      .orderBy("id").collect().toSeq
   }
 
   test("LSH gate folding: probe reads a constant-bounded root count at N " +
@@ -449,20 +520,7 @@ class StreamingSpec extends AnyFunSuite {
     val out = s"$dir/out"; val dropD = s"$dir/drop"
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     val n = 7; val compactEvery = 3
-    // n mtime-ordered single-file drops (the gate is order-insensitive —
-    // explicit stamps only pin the batch count and order).
-    val seen = scala.collection.mutable.Set.empty[String]
-    (0 until n).foreach { i =>
-      docs.filter(pmod(col("doc_id"), lit(n.toLong)) === i)
-        .coalesce(1).write.mode("append").parquet(dropD)
-      new java.io.File(dropD).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !seen(f.getName))
-        .foreach { f =>
-          require(f.setLastModified(1700000000000L + i * 60000L),
-            s"mtime stamp failed for $f")
-          seen += f.getName
-        }
-    }
+    stageDocDrops(docs, dropD, n, 0 until n)
     def runStream(ckpt: String): Unit = {
       val src = spark.readStream.schema("doc_id LONG, text STRING")
         .option("maxFilesPerTrigger", 1).parquet(dropD)
@@ -507,18 +565,7 @@ class StreamingSpec extends AnyFunSuite {
     // compactEvery=1 / fanout=2 exercises the LSM shape hardest: every
     // batch folds, every power-of-two fold cascades a carry merge.
     val n = 24; val compactEvery = 1; val fanout = 2
-    val seen = scala.collection.mutable.Set.empty[String]
-    (0 until n).foreach { i =>
-      docs.filter(pmod(col("doc_id"), lit(n.toLong)) === i)
-        .coalesce(1).write.mode("append").parquet(dropD)
-      new java.io.File(dropD).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !seen(f.getName))
-        .foreach { f =>
-          require(f.setLastModified(1700000000000L + i * 60000L),
-            s"mtime stamp failed for $f")
-          seen += f.getName
-        }
-    }
+    stageDocDrops(docs, dropD, n, 0 until n)
     def runStream(ckpt: String): Unit = {
       val src = spark.readStream.schema("doc_id LONG, text STRING")
         .option("maxFilesPerTrigger", 1).parquet(dropD)
@@ -562,11 +609,100 @@ class StreamingSpec extends AnyFunSuite {
     // (d) Publish == one-shot batch twin; full replay over the tiered
     // target byte-identical (each replayed batch reconstructs its prior
     // corpus via the src_batch cut across the visible runs).
-    val first = StreamOps.lshPairsRead(spark, out).orderBy("id").collect().toSeq
+    val (first, publishJobs) = countingJobs(
+      StreamOps.lshPairsRead(spark, out).orderBy("id").collect().toSeq)
     assert(first == oneShotLshFlags(docs) && first.nonEmpty)
+    // (e) One band layout: every run, the 16-batch one included, is a
+    // single pb-sorted directory; no hive `pb=<i>` tree anywhere.
+    assert(hiveDirs(out).isEmpty, s"hive pb= directories under $out")
+    // (f) Publish cost: no root costs a schema-inference or hive-listing
+    // job, so the jobs are the publish plan's own — 9 here, against 25
+    // with inferred schemas and a hive run 0-15.
+    info(s"lshPairsRead + collect over ${runs.size} runs: $publishJobs jobs")
+    assert(publishJobs <= 12,
+      s"lshPairsRead started $publishJobs jobs")
     runStream(s"$dir/ckpt2")
     val second = StreamOps.lshPairsRead(spark, out).orderBy("id").collect().toSeq
     assert(first == second)
+  }
+
+  test("LSH publish over a target no batch has written is empty, with the " +
+      "one-shot schema") {
+    val dir = Files.createTempDirectory("graft-lshempty").toString
+    val out = s"$dir/out"; val dropD = s"$dir/drop"
+    Files.createDirectories(java.nio.file.Paths.get(dropD))
+    val src = spark.readStream.schema("doc_id LONG, text STRING")
+      .option("maxFilesPerTrigger", 1).parquet(dropD)
+    StreamOps.lshPairsSink(src, out, s"$dir/ckpt").awaitTermination()
+    assert(!Files.exists(java.nio.file.Paths.get(out)),
+      "an empty AvailableNow run wrote a target")
+    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
+    val twin = oneShotLshFrame(docs.limit(0)).schema.catalogString
+    // No target directory, then a target directory without any root.
+    val missing = StreamOps.lshPairsRead(spark, out)
+    assert(missing.schema.catalogString == twin && missing.isEmpty)
+    Files.createDirectories(java.nio.file.Paths.get(out))
+    val bare = StreamOps.lshPairsRead(spark, out)
+    assert(bare.schema.catalogString == twin && bare.isEmpty)
+  }
+
+  test("LSH upgrade: a hive-layout run left by an earlier version is probed, " +
+      "published and replayed identically and rewritten flat at its tier " +
+      "merge; declared family schemas match what the writers produce") {
+    val dir = Files.createTempDirectory("graft-lshhive").toString
+    val out = s"$dir/out"; val dropD = s"$dir/drop"
+    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
+    val n = 12
+    def runStream(ckpt: String): Unit = {
+      val src = spark.readStream.schema("doc_id LONG, text STRING")
+        .option("maxFilesPerTrigger", 1).parquet(dropD)
+      StreamOps.lshPairsSink(src, out, ckpt, compactEvery = 1, tierFanout = 2)
+        .awaitTermination()
+    }
+    def publish() = StreamOps.lshPairsRead(spark, out).orderBy("id").collect().toSeq
+    // Batches 0-5 leave runs 0-3 and 4-4. Rewrite run 0-3 the way earlier
+    // versions wrote every run of at least compactEvery·fanout² batches:
+    // hive-partitioned by pb, its cdone_ marker kept.
+    stageDocDrops(docs, dropD, n, 0 until 6)
+    runStream(s"$dir/ckpt1")
+    val run = s"$out/cbands_0_3"
+    spark.read.parquet(run).repartition(col("pb"))
+      .write.partitionBy("pb").parquet(s"$dir/hive")
+    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new Path(run), true) &&
+      fs.rename(new Path(s"$dir/hive"), new Path(run)))
+    assert(hiveDirs(run).nonEmpty && new java.io.File(s"$out/cdone_0_3").exists())
+    // The declared schema reads the hive run whole: pb comes back from the
+    // directory names, never as nulls.
+    val hive = spark.read.schema(StreamOps.lshSchema("cbands")).parquet(run)
+    assert(hive.count() > 0 && hive.filter(col("pb").isNull).isEmpty)
+    val firstDocs = docs.filter(pmod(col("doc_id"), lit(n.toLong)) < 6)
+    val first = publish()
+    assert(first == oneShotLshFlags(firstDocs) && first.nonEmpty)
+    // A full replay probes the hive run through the src_batch cut (batch 5
+    // is a live tail, so its pairs are re-published) and leaves it in place.
+    runStream(s"$dir/ckpt2")
+    assert(hiveDirs(run).nonEmpty)
+    assert(publish() == first)
+    // Batches 6-11: batches 6 and 7 probe the hive run; batch 8's tier
+    // merge consumes it into run 0-7, written flat.
+    stageDocDrops(docs, dropD, n, 6 until n)
+    runStream(s"$dir/ckpt1")
+    def names = new java.io.File(out).listFiles().map(_.getName).toSet
+    assert(names("cdone_0_7") && !names("cbands_0_3"), s"unexpected layout $names")
+    assert(hiveDirs(out).isEmpty, s"hive pb= directories left under $out")
+    val all = publish()
+    assert(all == oneShotLshFlags(docs))
+    runStream(s"$dir/ckpt3")
+    assert(publish() == all)
+    // Each family's declared schema is what its writer produces, so a
+    // writer change cannot read back as null columns.
+    Seq("bands_11", "sigs_11", "inc_11", "cbands_0_7", "csigs_0_7", "cinc_0_7")
+      .foreach { root =>
+        val family = root.takeWhile(_ != '_')
+        assert(spark.read.parquet(s"$out/$root").schema.catalogString ==
+          StreamOps.lshSchema(family).catalogString, s"$family schema drifted")
+      }
   }
 
   test("drift sink: accumulated count increments reproduce the batch TV " +
