@@ -5,8 +5,8 @@ import org.apache.spark.sql.GraftBridge
 
 /** Dev probe: decompose sharedShingleCounts' hot stage (the posting
   * collect_set -> PairCombos -> pair agg) into timed pieces to find
-  * where the CPU actually goes. Measurement tooling only (the RunOne /
-  * MicroHash class); not part of the library surface.
+  * where the CPU actually goes. Measurement tooling only (the RunOne
+  * class); not part of the library surface.
   */
 object ShinglePipeProbe {
   def main(args: Array[String]): Unit = {

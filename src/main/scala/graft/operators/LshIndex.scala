@@ -34,12 +34,8 @@ object LshIndex {
       maxBucket: Int = 100, keyBuckets: Int = 64): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val sigs = TextDedup.withMinhashSignature(
-        corpus.select(col(idCol).as("corpus_id"), col(textCol)),
-        textCol, shingleN, numHashes)
-      .select(col("corpus_id"),
-        TextDedup.bandKeys(col("sig"), numHashes, rowsPerBand).as("bands"),
-        col("sig"))
+    val sigs = MinHashLsh.signatureFrame(corpus, idCol, textCol,
+      shingleN, numHashes, rowsPerBand, idAs = "corpus_id")
     Seq((shingleN, numHashes, rowsPerBand, maxBucket, keyBuckets))
       .toDF("shingle_n", "num_hashes", "rows_per_band", "max_bucket", "key_buckets")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
@@ -47,11 +43,8 @@ object LshIndex {
       .write.mode("overwrite").parquet(s"$path/sigs")
     val ix = sigs
       .select(col("corpus_id"), posexplode(col("bands")).as(Seq("band", "key")))
-    ix.join(
-        ix.groupBy("band", "key").agg(count(lit(1)).as("n"))
-          .filter(col("n") <= maxBucket),
-        Seq("band", "key"))
-      .withColumn("pb", pbCol(col("band"), col("key"), keyBuckets))
+    MinHashLsh.capBuckets(ix, Seq("band", "key"), maxBucket)
+      .withColumn("pb", MinHashLsh.pb(col("band"), col("key"), keyBuckets))
       // Cluster by partition value so each task writes only its own pb
       // directories — one file per dir instead of tasks × dirs.
       .repartition(col("pb"))
@@ -81,17 +74,13 @@ object LshIndex {
       meta.getAs[Int]("key_buckets"))
     // Materialize: the signature computation feeds two writes and the
     // occupancy counts — compute it once.
-    val sigs = Materialize(TextDedup.withMinhashSignature(
-        newDocs.select(col(idCol).as("corpus_id"), col(textCol)),
-        textCol, shingleN, numHashes)
-      .select(col("corpus_id"),
-        TextDedup.bandKeys(col("sig"), numHashes, rowsPerBand).as("bands"),
-        col("sig")))
+    val sigs = Materialize(MinHashLsh.signatureFrame(newDocs, idCol, textCol,
+      shingleN, numHashes, rowsPerBand, idAs = "corpus_id"))
     sigs.select(col("corpus_id"), col("sig"))
       .write.mode("append").parquet(s"$path/sigs")
     val ix = Materialize(sigs
       .select(col("corpus_id"), posexplode(col("bands")).as(Seq("band", "key")))
-      .withColumn("pb", pbCol(col("band"), col("key"), keyBuckets)))
+      .withColumn("pb", MinHashLsh.pb(col("band"), col("key"), keyBuckets)))
     val pbs = ix.select("pb").distinct().collect().map(_.getInt(0)).sorted
     val existing = spark.read.parquet(s"$path/index")
       .filter(col("pb").isin(pbs.map(Int.box): _*))
@@ -106,12 +95,6 @@ object LshIndex {
       .write.mode("append").partitionBy("pb").parquet(s"$path/index")
   }
 
-  /** band·keyBuckets + (key mod keyBuckets) — the single partition value
-    * shared by build and probe (one definition, no drift). */
-  private def pbCol(band: org.apache.spark.sql.Column,
-      key: org.apache.spark.sql.Column, keyBuckets: Int): org.apache.spark.sql.Column =
-    (band.cast("long") * keyBuckets + pmod(key, lit(keyBuckets.toLong))).cast("int")
-
   /** Flag new-batch docs whose bands collide with the persisted corpus
     * and whose signature similarity clears `threshold`. Output matches
     * [[TextDedup.minhashIncremental]]: (id, n_matches, best_match,
@@ -123,15 +106,11 @@ object LshIndex {
     val (shingleN, numHashes, rowsPerBand, keyBuckets) = (
       meta.getAs[Int]("shingle_n"), meta.getAs[Int]("num_hashes"),
       meta.getAs[Int]("rows_per_band"), meta.getAs[Int]("key_buckets"))
-    val newSigs = Materialize(TextDedup.withMinhashSignature(
-        newBatch.select(col(idCol).as("id"), col(textCol)),
-        textCol, shingleN, numHashes)
-      .select(col("id"),
-        TextDedup.bandKeys(col("sig"), numHashes, rowsPerBand).as("bands"),
-        col("sig")))
+    val newSigs = Materialize(MinHashLsh.signatureFrame(newBatch, idCol, textCol,
+      shingleN, numHashes, rowsPerBand))
     val probes = Materialize(newSigs
       .select(col("id"), posexplode(col("bands")).as(Seq("band", "key")))
-      .withColumn("pb", pbCol(col("band"), col("key"), keyBuckets)))
+      .withColumn("pb", MinHashLsh.pb(col("band"), col("key"), keyBuckets)))
     // The (band, key-bucket) partitions this batch actually touches, as
     // STATIC literals: bounded by batch×numBands, and far below
     // numBands×keyBuckets for the incremental small-batch case — the
@@ -141,20 +120,7 @@ object LshIndex {
       .filter(col("pb").isin(pbs.map(Int.box): _*))
       .join(probes.select("band", "key", "id"), Seq("band", "key"))
       .select(col("id"), col("corpus_id")).distinct()
-    cands
-      .join(newSigs.select(col("id"), col("sig")), "id")
-      .join(spark.read.parquet(s"$path/sigs")
-        .select(col("corpus_id").as("cid"), col("sig").as("csig")),
-        col("corpus_id") === col("cid"))
-      .withColumn("est_jaccard",
-        size(filter(zip_with(col("sig"), col("csig"), (x, y) => x === y), b => b))
-          .cast("double") / numHashes)
-      .filter(col("est_jaccard") >= threshold)
-      .groupBy(col("id"))
-      .agg(count(lit(1)).as("n_matches"),
-        max(struct(col("est_jaccard"), col("corpus_id"))).as("best"))
-      .select(col("id"), col("n_matches"),
-        col("best.corpus_id").as("best_match"), col("best.est_jaccard").as("best_est"))
-      .orderBy(col("id"))
+    MinHashLsh.bestMatches(cands, newSigs, spark.read.parquet(s"$path/sigs"),
+      numHashes, threshold)
   }
 }

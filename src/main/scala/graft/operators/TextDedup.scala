@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.GraftBridge
 
-import graft.functions.{MinhashSig, Shingles, SimHash}
+import graft.functions.{Shingles, SimHash}
 
 /** Document-deduplication operators for training-data pipelines
   * (SURVEY.md §2.3). Scale posture: every sketch (minhash signature,
@@ -217,10 +217,6 @@ object TextDedup {
   /** Distinct character n-gram shingles of normalized text. */
   def charShingles(text: Column, n: Int): Column =
     GraftBridge.column(Shingles(GraftBridge.expression(text), n, word = false))
-
-  /** MinHash signature column of a shingle-array column. */
-  def minhashSig(shingles: Column, numHashes: Int): Column =
-    GraftBridge.column(MinhashSig(GraftBridge.expression(shingles), numHashes))
 
   /** Items with (estimated) frequency > maxDf via one SpaceSaving pass —
     * the constant-shuffle alternative to an exact `groupBy(item).count`
@@ -856,22 +852,6 @@ object TextDedup {
   // MinHash + LSH
   // ------------------------------------------------------------------
 
-  /** Add a minhash signature column `sig` (array<bigint>, `numHashes`
-    * long). Hash family: xxhash64(shingle, seed_i) via the native
-    * MinhashSig expression — one narrow projection, no shuffle.
-    */
-  def withMinhashSignature(df: DataFrame, textCol: String,
-      shingleN: Int = 3, numHashes: Int = 32): DataFrame =
-    df.withColumn("sig", minhashSig(wordShingles(col(textCol), shingleN), numHashes))
-
-  /** LSH band keys from a minhash signature: one 64-bit key per band of
-    * `rowsPerBand` signature positions.
-    */
-  def bandKeys(sig: Column, numHashes: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(numHashes / rowsPerBand - 1)),
-      b => xxhash64(concat_ws("_",
-        transform(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)), _.cast("string"))), b))
-
   /** Near-duplicate candidate pairs via MinHash-LSH, ranked by estimated
     * Jaccard (fraction of matching signature positions). `maxBucket` caps
     * degenerate buckets (skew guard for the self-join at scale).
@@ -881,24 +861,16 @@ object TextDedup {
       k: Int = 20, maxBucket: Int = 100): DataFrame = {
     // Materialized: signatures are re-read by the band explode and both
     // sides of the candidate verification join (3 passes otherwise).
-    val sigs = cached(withMinhashSignature(
-        df.select(col(idCol).as("id"), col(textCol)), textCol, shingleN, numHashes)
-      .select(col("id"), col("sig"), bandKeys(col("sig"), numHashes, rowsPerBand).as("bands")))
-    val ex = sigs.select(col("id"), posexplode(col("bands")).as(Seq("band", "key")))
-    val bounded = ex.join(
-      ex.groupBy("band", "key").agg(count(lit(1)).as("bucket_n"))
-        .filter(col("bucket_n") > 1 && col("bucket_n") <= maxBucket),
-      Seq("band", "key"))
-    val cands = bounded.as("a").join(bounded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
+    val sigs = cached(MinHashLsh.signatureFrame(
+      df, idCol, textCol, shingleN, numHashes, rowsPerBand))
+    val cands = MinHashLsh.bandPairs(
+      sigs.select(col("id"), posexplode(col("bands")).as(Seq("band", "key"))),
+      "id", Seq("band", "key"), Some(maxBucket))
     val est = cands
       .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
       .withColumn("est_jaccard",
-        size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), b => b))
-          .cast("double") / numHashes)
+        MinHashLsh.agreement(col("sig_a"), col("sig_b")).cast("double") / numHashes)
     est.select("id_a", "id_b", "est_jaccard")
       .orderBy(col("est_jaccard").desc, col("id_a"), col("id_b"))
       .limit(k)
@@ -917,41 +889,23 @@ object TextDedup {
       idCol: String, textCol: String, shingleN: Int = 3, numHashes: Int = 32,
       rowsPerBand: Int = 2, threshold: Double = 0.5,
       maxBucket: Int = 100): DataFrame = {
-    def sigs(df: DataFrame) = withMinhashSignature(
-        df.select(col(idCol).as("id"), col(textCol)), textCol, shingleN, numHashes)
-      .select(col("id"), col("sig"),
-        bandKeys(col("sig"), numHashes, rowsPerBand).as("bands"))
     // Materialized (leak-free, see `cached`): each side is read by the
     // band index AND the verification join; a long-lived session keeps
     // no pinned cache entries behind after the query's action.
-    val corpusSigs = cached(sigs(corpus))
-    val newSigs = cached(sigs(newBatch))
-    val corpusIx = corpusSigs
-      .select(col("id").as("corpus_id"), posexplode(col("bands")).as(Seq("band", "key")))
+    val corpusSigs = cached(MinHashLsh.signatureFrame(
+      corpus, idCol, textCol, shingleN, numHashes, rowsPerBand, idAs = "corpus_id"))
+    val newSigs = cached(MinHashLsh.signatureFrame(
+      newBatch, idCol, textCol, shingleN, numHashes, rowsPerBand))
     // Degenerate-bucket cap on the corpus side (same skew guard as the
     // self-join variant).
-    val bounded = corpusIx.join(
-      corpusIx.groupBy("band", "key").agg(count(lit(1)).as("n"))
-        .filter(col("n") <= maxBucket),
-      Seq("band", "key"))
+    val bounded = MinHashLsh.capBuckets(
+      corpusSigs.select(col("corpus_id"), posexplode(col("bands")).as(Seq("band", "key"))),
+      Seq("band", "key"), maxBucket)
     val cands = newSigs
       .select(col("id"), posexplode(col("bands")).as(Seq("band", "key")))
       .join(bounded, Seq("band", "key"))
       .select(col("id"), col("corpus_id")).distinct()
-    cands
-      .join(newSigs.select(col("id"), col("sig")), "id")
-      .join(corpusSigs.select(col("id").as("cid"), col("sig").as("csig")),
-        col("corpus_id") === col("cid"))
-      .withColumn("est_jaccard",
-        size(filter(zip_with(col("sig"), col("csig"), (x, y) => x === y), b => b))
-          .cast("double") / numHashes)
-      .filter(col("est_jaccard") >= threshold)
-      .groupBy(col("id"))
-      .agg(count(lit(1)).as("n_matches"),
-        max(struct(col("est_jaccard"), col("corpus_id"))).as("best"))
-      .select(col("id"), col("n_matches"),
-        col("best.corpus_id").as("best_match"), col("best.est_jaccard").as("best_est"))
-      .orderBy(col("id"))
+    MinHashLsh.bestMatches(cands, newSigs, corpusSigs, numHashes, threshold)
   }
 
   // ------------------------------------------------------------------

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{DedupResolve, TextDedup, TextStats, WebText}
+import graft.operators.{DedupResolve, MinHashLsh, TextDedup, TextStats, WebText}
 import graft.sources.Tables
 
 /** Training-data curation operators beyond the sketch family (SURVEY.md
@@ -1775,8 +1775,7 @@ object DataPipelineQueries {
     Q("x_leakage_split_banded",
       (s, dir) => {
         val docs = Tables.documents(s, dir)
-        val bands = TextQueries.portableBands(
-          TextQueries.portableMinhashSig(docs))
+        val bands = MinHashLsh.portableBands(MinHashLsh.portableMinhashSig(docs))
         leakageSplitFromComps(docs,
           DedupResolve.bucketComponents(
               bands.select(col("doc_id"),
@@ -1831,7 +1830,7 @@ object DataPipelineQueries {
     // geometry (16×2 over 32 positions) and the same bucket-star
     // component shape, with the sha256 portability discipline swapped
     // for the native xxhash64 signatures
-    // (TextDedup.withMinhashSignature/bandKeys — one narrow codegen'd
+    // (MinHashLsh.withMinhashSignature/bandKeys — one narrow codegen'd
     // projection, no per-shingle join). rows-only like every xxhash64
     // query (no DuckDB builtin) — the portable twin is the bit-level
     // oracle anchor, same pattern as d_dedup_minhash_lsh (32) /
@@ -1844,15 +1843,15 @@ object DataPipelineQueries {
         // split), and the per-doc 32-way minhash is the CPU-dominant
         // stage — computed in the scan projection it runs on one core
         // (246 s at sf10 vs 8.5 s spread, r8 measurement). Same
-        // discipline as portableMinhashSig's repartition.
+        // discipline as MinHashLsh.portableMinhashSig's repartition.
         val spreadDocs = docs.select(col("doc_id"), col("text"))
           .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt,
             col("doc_id"))
-        val bands = TextDedup.withMinhashSignature(
+        val bands = MinHashLsh.withMinhashSignature(
             spreadDocs, "text",
             shingleN = 3, numHashes = 32)
           .select(col("doc_id"),
-            posexplode(TextDedup.bandKeys(col("sig"), 32, 2))
+            posexplode(MinHashLsh.bandKeys(col("sig"), 32, 2))
               .as(Seq("band", "key")))
         leakageSplitFromComps(docs,
           DedupResolve.bucketComponents(

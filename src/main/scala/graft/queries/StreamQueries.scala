@@ -519,13 +519,14 @@ object StreamQueries {
     // Streaming MinHash-LSH append gate (ORACLED, r13): documents stream
     // in two doc_id-split drops through a REAL readStream +
     // StreamOps.lshPairsSink — each micro-batch appends its portable
-    // signatures and pb-partitioned band postings as batchId-keyed
-    // idempotent overwrites, probes ONLY the posting partitions its own
-    // band keys touch (the LshIndex partition-pruning discipline — the
-    // standing corpus is never rescanned), and emits its new candidate
-    // pairs (new×old + new×new per bucket). Pair emission is symmetric
-    // and the occupancy cap is applied against FINAL occupancy at
-    // publish, so the accumulated result == the ONE-SHOT banded query
+    // signatures and band postings as batchId-keyed idempotent
+    // overwrites (one flat directory per batch or folded run, sorted on
+    // MinHashLsh.pb), probes ONLY the posting row groups its own band
+    // keys touch (a static pb IN (...) filter pruned from the parquet
+    // footers — the standing corpus is never rescanned), and emits its
+    // new candidate pairs (new×old + new×new per bucket). Pair emission
+    // is symmetric and the occupancy cap is applied against FINAL
+    // occupancy at publish, so the accumulated result == the ONE-SHOT banded query
     // over the whole corpus for ANY batch boundaries. Published
     // contract is PER-DOC dedup flags (id, n_matches, best_match,
     // best_n_eq vs lower-id partners at agreement ≥ 16/32 — the

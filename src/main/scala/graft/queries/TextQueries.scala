@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{DedupResolve, IvfIndex, MediaFeatureStore, Multimodal, SemDedup, Similarity, TextClean, TextDedup, TextStats}
+import graft.operators.{DedupResolve, IvfIndex, MediaFeatureStore, MinHashLsh, Multimodal, SemDedup, Similarity, TextClean, TextDedup, TextStats}
 import graft.sources.Tables
 
 /** LLM-training-data operators (SURVEY.md §2.3) wired to the driver tables.
@@ -83,96 +83,6 @@ object TextQueries {
     })
     MediaFeatureStore.load(s, path)
   }
-
-  /** Distinct lowercase-whitespace 3-gram shingles — the portable (sha256-
-    * replayable) tokenization shared by d_minhash_portable, x_dedup_eval
-    * and the banded leakage split. Shifted-zip kGrams: lambdas must not
-    * touch the `ts` alias — CollapseProject would inline the tokenizer per
-    * shingle (quadratic interpreted re-evaluation).
-    *
-    * Short-doc rule (mirrors `Shingles`' native wordShingles): a doc with
-    * fewer than 3 tokens gets ONE whole-text shingle instead of being
-    * dropped. Dropping made identical short docs singletons keyed by their
-    * own ids — a DETERMINISTIC leakage-split violation (two copies of the
-    * same 2-token doc could land on opposite split sides), far worse than
-    * the banded tier's 8.7e-8 probabilistic miss. The oracles replay the
-    * rule as a CASE on len(ts).
-    */
-  private def portableShingles(docs: org.apache.spark.sql.DataFrame) = {
-    val base = docs.select(col("doc_id"),
-        filter(split(lower(col("text")), "\\s+"), t => t =!= "").as("ts"))
-    base.select(col("doc_id"),
-      when(size(col("ts")) < 3, array(array_join(col("ts"), " ")))
-        .otherwise(array_distinct(
-          slice(graft.operators.Winnow.kGrams(col("ts"), 3), lit(1),
-            greatest(size(col("ts")) - 2, lit(0))))).as("shs"))
-  }
-
-  /** Materialized portable MinHash signatures (doc_id, sig[32]): 4 sha256
-    * digests per shingle OCCURRENCE, each digest yielding 8 independent
-    * 32-bit values via hex slices; per-doc elementwise-min through
-    * VecMinAgg (fixed 32-long buffer, map-side). Doc-keyed repartition
-    * BEFORE the explode spreads the single-file scan — and because the
-    * hash→min chain never re-keys, that ONE exchange of the compact doc
-    * frame is the pipeline's ONLY shuffle: explode, sha256, and the
-    * partial+final vecMin all run inside the doc-partitioned stage.
-    *
-    * r10 scale lesson (the sf100 probe's disk kill): the previous shape
-    * hashed per DISTINCT shingle and joined the signatures back to the
-    * exploded (doc, shingle) frame — "save 10× the sha256 calls". But
-    * that join re-keys 500M occurrence rows by shingle and then ships a
-    * 264-byte 32-long array per row (plus per-partition partials ×
-    * numPartitions) into the doc_id exchange: ~150 GB of shuffle at
-    * sf100, which overflowed the box's disk — while the sha256 calls it
-    * saved are embarrassingly parallel CPU (~1 µs each, no shuffle at
-    * any corpus size). Hash-per-occurrence is identical semantically
-    * (the per-doc min ranges over the same values) and trades the
-    * engine's scarce resource (shuffle bytes) for its abundant one.
-    */
-  /** [[portableMinhashSig]] over a caller-prepared (doc_id, shs) shingle
-    * frame — for callers that ALSO consume the shingles (x_dedup_eval's
-    * exact-truth side): sharing the tokenize+shingle pass beats running
-    * it once per consumer.
-    */
-  private[graft] def portableMinhashSigFromShingles(
-      shs: org.apache.spark.sql.DataFrame) = {
-    import graft.operators.Materialize
-    // sha256 digest bytes read as 8 unsigned-int lanes directly
-    // (graft.functions.sha256Lanes) — value-identical to the previous
-    // conv(substr(sha2-hex))-per-lane formula (Sha256LanesSpec pins it;
-    // the oracle SQL is unchanged), minus 9 string allocations + 8 hex
-    // parses per digest in THE per-shingle-occurrence hot path of the
-    // whole portable family (this sig feeds d_minhash_portable,
-    // x_dedup_eval, s_ann_lsh_portable scoring and the streaming
-    // lshPairsSink). Interleaved one-JVM micro-bench (graft.MicroHash,
-    // 4M shingles × 32 lanes): 3.5-3.8 s hex formula vs 0.4-0.8 s
-    // lanes, identical bit_xor checksum.
-    val hs = flatten(array((0 until 4).map(g =>
-      graft.functions.sha256Lanes(concat(lit(s"$g|"), col("shingle")))): _*))
-    // Explicit count: a bare repartition(col) is AQE-coalescible and the
-    // compact doc frame coalesces to 1-2 partitions, serializing the
-    // CPU-dominant shingle/sha256 stage (see synthMedia's note).
-    Materialize(shs
-      .repartition(shs.sparkSession.conf
-        .get("spark.sql.shuffle.partitions", "32").toInt, col("doc_id"))
-      .select(col("doc_id"), explode(col("shs")).as("shingle"))
-      .select(col("doc_id"), hs.as("hs"))
-      .groupBy("doc_id")
-      .agg(graft.functions.vecMin(col("hs"), 32).as("sig")))
-  }
-
-  private[graft] def portableMinhashSig(docs: org.apache.spark.sql.DataFrame) =
-    portableMinhashSigFromShingles(portableShingles(docs))
-
-  /** 16 bands × 2 rows over a 32-long signature frame. */
-  private[graft] def portableBands(sig: org.apache.spark.sql.DataFrame) =
-    sig.select(col("doc_id"), explode(
-        transform(sequence(lit(0), lit(15)),
-          b => struct(b.as("b"),
-            element_at(col("sig"), b * 2 + 1).as("k1"),
-            element_at(col("sig"), b * 2 + 2).as("k2")))).as("bd"))
-      .select(col("doc_id"), col("bd.b").as("b"),
-        col("bd.k1").as("k1"), col("bd.k2").as("k2"))
 
   val all: Seq[Q] = Seq(
 
@@ -622,24 +532,13 @@ object TextQueries {
     // occupancy cap carries no discrimination.
     Q("d_minhash_portable",
       (s, dir) => {
-        val sig = portableMinhashSig(Tables.documents(s, dir))
-        val bands = portableBands(sig)
-        val capped = bands.join(
-          bands.groupBy("b", "k1", "k2").agg(count(lit(1)).as("bucket_n"))
-            .filter(col("bucket_n") > 1 && col("bucket_n") <= 100)
-            .select("b", "k1", "k2"),
-          Seq("b", "k1", "k2"))
-        val pairs = capped.as("a").join(capped.as("b"),
-            col("a.b") === col("b.b") && col("a.k1") === col("b.k1") &&
-            col("a.k2") === col("b.k2") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          .distinct()
+        val sig = MinHashLsh.portableMinhashSig(Tables.documents(s, dir))
+        val pairs = MinHashLsh.bandPairs(MinHashLsh.portableBands(sig),
+          "doc_id", Seq("b", "k1", "k2"), Some(100))
         pairs
           .join(sig.select(col("doc_id").as("id_a"), col("sig").as("sa")), "id_a")
           .join(sig.select(col("doc_id").as("id_b"), col("sig").as("sb")), "id_b")
-          .withColumn("n_eq",
-            size(filter(zip_with(col("sa"), col("sb"), (x, y) => x === y),
-              p => p)).cast("long"))
+          .withColumn("n_eq", MinHashLsh.agreement(col("sa"), col("sb")).cast("long"))
           .select("id_a", "id_b", "n_eq")
           .orderBy(col("n_eq").desc, col("id_a"), col("id_b"))
           .limit(20)
@@ -721,19 +620,14 @@ object TextQueries {
         // (≤ ~25k docs by the pct bound), so the localCheckpoint is
         // cheap and the saved work is a full second tokenize+shingle
         // evaluation of the sampled corpus.
-        val shs = graft.operators.Materialize(portableShingles(docs))
-        val sig = portableMinhashSigFromShingles(shs)
-        val bands = portableBands(sig)
-        val cand = bands.as("a").join(bands.as("b"),
-            col("a.b") === col("b.b") && col("a.k1") === col("b.k1") &&
-            col("a.k2") === col("b.k2") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          .distinct()
+        val shs = graft.operators.Materialize(MinHashLsh.portableShingles(docs))
+        val sig = MinHashLsh.portableMinhashSigFromShingles(shs)
+        val cand = MinHashLsh.bandPairs(MinHashLsh.portableBands(sig),
+          "doc_id", Seq("b", "k1", "k2"), None)
         val est = cand
           .join(sig.select(col("doc_id").as("id_a"), col("sig").as("sa")), "id_a")
           .join(sig.select(col("doc_id").as("id_b"), col("sig").as("sb")), "id_b")
-          .filter(size(filter(zip_with(col("sa"), col("sb"), (x, y) => x === y),
-            p => p)) >= 16)
+          .filter(MinHashLsh.agreement(col("sa"), col("sb")) >= 16)
           .select("id_a", "id_b")
         val ex = shs
           .select(col("doc_id"), size(col("shs")).as("sz"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.Transform
+import graft.operators.{MinHashLsh, Transform}
 import graft.sources.Swap
 
 /** Structured Streaming analogs of the reference's incremental ETL
@@ -781,16 +781,19 @@ object StreamOps {
 
   /** foreachBatch MinHash-LSH candidate-pair sink — the streaming twin
     * of the banded near-dup detector (d_minhash_portable's pair stage),
-    * maintaining a persisted band index incrementally the way
-    * [[graft.operators.LshIndex.append]] does: each micro-batch writes
-    * its portable signatures and band postings as batchId-keyed
-    * OVERWRITES (idempotent under at-least-once replay — a plain
-    * `append` to one index tree would double postings on a batch
-    * re-run), the posting files range-partitioned and sorted on
-    * `pb = band·keyBuckets + (k1 mod keyBuckets)` so the probe against
-    * the standing corpus reads ONLY the row groups the batch's own band
-    * keys touch (a static `pb IN (...)` filter pruned from the parquet
-    * footers — the standing corpus is never rescanned).
+    * maintaining a persisted band index incrementally. Unlike
+    * [[graft.operators.LshIndex.append]], which adds files to the
+    * partition directories of one hive-partitioned tree, each
+    * micro-batch writes its portable signatures and band postings as
+    * batchId-keyed flat directories it OVERWRITES (idempotent under
+    * at-least-once replay — a plain `append` to one index tree would
+    * double postings on a batch re-run), the posting files
+    * range-partitioned and sorted on
+    * `pb = band·keyBuckets + (k1 mod keyBuckets)` ([[MinHashLsh.pb]])
+    * so the probe against the standing corpus reads ONLY the row groups
+    * the batch's own band keys touch (a static `pb IN (...)` filter
+    * pruned from the parquet footers — the standing corpus is never
+    * rescanned).
     *
     * Pair emission is EXACT against the one-shot batch query over the
     * union, for any batch boundaries and any arrival order (pairs are
@@ -852,15 +855,13 @@ object StreamOps {
         if (fs.exists(new Path(targetDir)))
           lshCleanup(fs, targetDir, visible0, hi)
         // Already a local checkpoint: the batch is hashed once.
-        val sigs = graft.queries.TextQueries.portableMinhashSig(batch)
+        val sigs = MinHashLsh.portableMinhashSig(batch)
         // A folded batch's replay still overwrites its own snapshots
         // (idempotent, deterministic) — readers ignore ids ≤ hi, so the
         // strays are dead weight until the next cleanup, never input.
         sigs.write.mode("overwrite").parquet(s"$targetDir/sigs_$batchId")
-        val bands = graft.operators.Materialize(
-          graft.queries.TextQueries.portableBands(sigs)
-            .withColumn("pb", (col("b").cast("long") * keyBuckets +
-              pmod(col("k1"), lit(keyBuckets.toLong))).cast("int")))
+        val bands = graft.operators.Materialize(MinHashLsh.portableBands(sigs)
+          .withColumn("pb", MinHashLsh.pb(col("b"), col("k1"), keyBuckets)))
         writeBands(bands, s"$targetDir/bands_$batchId")
         // L0 fold due? Covers batches hi+1..batchId-1 (never the current
         // batch: the probe's prior-corpus join excludes own postings, and
@@ -1031,9 +1032,7 @@ object StreamOps {
     pairs
       .join(sigs.toDF("id_a", "sa"), "id_a")
       .join(sigs.toDF("id_b", "sb"), "id_b")
-      .withColumn("n_eq",
-        size(filter(zip_with(col("sa"), col("sb"), (x, y) => x === y),
-          p => p)).cast("long"))
+      .withColumn("n_eq", MinHashLsh.agreement(col("sa"), col("sb")).cast("long"))
       .filter(col("n_eq") >= minAgree)
       .groupBy(col("id_b").as("id"))
       .agg(count(lit(1)).as("n_matches"),

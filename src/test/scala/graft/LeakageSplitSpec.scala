@@ -124,8 +124,8 @@ class LeakageSplitSpec extends AnyFunSuite {
     * portable minhash → 16×2 bands → (b,k1,k2) bucket key).
     */
   private def bandedState(d: org.apache.spark.sql.DataFrame) = {
-    val bands = graft.queries.TextQueries.portableBands(
-      graft.queries.TextQueries.portableMinhashSig(
+    val bands = graft.operators.MinHashLsh.portableBands(
+      graft.operators.MinHashLsh.portableMinhashSig(
         d.select(col("doc_id"), col("text"))))
     bands.select(col("doc_id"),
       struct(col("b"), col("k1"), col("k2")).as("bucket"))
@@ -198,12 +198,13 @@ class LeakageSplitSpec extends AnyFunSuite {
   }
 
   test("identical short docs (<3 tokens) share a banded component") {
-    // The r8 gap: portableShingles DROPPED <3-token docs, so two copies
-    // of the same 2-token doc were singletons keyed by their own doc_ids
-    // and could land on opposite split sides — a DETERMINISTIC integrity
-    // violation, not the 8.7e-8 band miss. The short-doc rule (whole-text
-    // shingle, mirroring native wordShingles) makes them share every band
-    // bucket; non-identical short docs must NOT be forced together.
+    // The r8 gap: MinHashLsh.portableShingles DROPPED <3-token docs, so
+    // two copies of the same 2-token doc were singletons keyed by their
+    // own doc_ids and could land on opposite split sides — a
+    // DETERMINISTIC integrity violation, not the 8.7e-8 band miss. The
+    // short-doc rule (whole-text shingle, mirroring native wordShingles)
+    // makes them share every band bucket; non-identical short docs must
+    // NOT be forced together.
     val shorts = Seq(
       (1L, "hola mundo"), (2L, "hola mundo"),       // identical 2-token
       (3L, "uno"), (4L, "uno"),                     // identical 1-token

@@ -488,8 +488,8 @@ class StreamingSpec extends AnyFunSuite {
 
   private def oneShotLshFrame(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val sig = graft.queries.TextQueries.portableMinhashSig(docs)
-    val bands = graft.queries.TextQueries.portableBands(sig)
+    val sig = graft.operators.MinHashLsh.portableMinhashSig(docs)
+    val bands = graft.operators.MinHashLsh.portableBands(sig)
     val capped = bands.join(
       bands.groupBy("b", "k1", "k2").agg(count(lit(1)).as("occ"))
         .filter(col("occ") > 1 && col("occ") <= 100).select("b", "k1", "k2"),

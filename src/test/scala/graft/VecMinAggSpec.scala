@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** VecMinAgg — elementwise-min signature aggregation (used by
-  * d_minhash_portable): equals the posexplode + min + reassemble shape,
-  * survives multi-partition merge, ignores null rows.
+  * MinHashLsh.portableMinhashSig): equals the posexplode + min +
+  * reassemble shape, survives multi-partition merge, ignores null rows.
   */
 class VecMinAggSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
