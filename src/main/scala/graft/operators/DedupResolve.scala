@@ -181,15 +181,9 @@ object DedupResolve {
     }
     var sig = fingerprint(edges)
 
-    // Opt-in round telemetry (GRAFT_CC_DEBUG=1): round wall time + edge
-    // count — the profile the sf10/sf100 probes read. Zero cost unset.
-    val ccDebug = sys.env.contains("GRAFT_CC_DEBUG")
-    if (ccDebug) println(s"[cc] init edges=${sig._1}")
-
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      val tRound = System.nanoTime()
       // LARGE-STAR: every neighbor v > u hangs onto m = min(Γ(u) ∪ {u}).
       val dirL = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
       val mnL = dirL.groupBy(col("u")).agg(min(col("v")).as("mn"))
@@ -215,8 +209,6 @@ object DedupResolve {
       converged = nsig == sig
       sig = nsig
       iter += 1
-      if (ccDebug) println(f"[cc] round $iter edges=${nsig._1} " +
-        f"${(System.nanoTime() - tRound) / 1e9}%.2fs")
     }
     if (!converged)
       throw new IllegalStateException(

@@ -561,9 +561,6 @@ object TextDedup {
     // (PackedJaccard replicates VerifyPairs' merge-intersect and double
     // arithmetic), so oracles and consumers cannot tell them apart.
     val nCand = canon.count()
-    if (sys.env.contains("GRAFT_VERIFY_DEBUG"))
-      System.err.println(s"[verify-cutover] candidates=$nCand " +
-        s"branch=${if (nCand <= directMaxPairs) "direct" else "cluster"}")
     if (nCand <= directMaxPairs) {
       val packed1 = hsets.select(col("id"), flatten(transform(col("fp"),
         e => array(e.getField("h"), e.getField("h2")))).as("fpl"))

@@ -518,12 +518,13 @@ object StreamQueries {
     // ------------------------------------------------------------------
     // Streaming MinHash-LSH append gate (ORACLED, r13): documents stream
     // in two doc_id-split drops through a REAL readStream +
-    // StreamOps.lshPairsSink — each micro-batch appends its portable
-    // signatures and band postings as batchId-keyed idempotent
-    // overwrites (one flat directory per batch or folded run, sorted on
-    // MinHashLsh.pb), probes ONLY the posting row groups its own band
-    // keys touch (a static pb IN (...) filter pruned from the parquet
-    // footers — the standing corpus is never rescanned), and emits its
+    // StreamOps.lshPairsSink — each micro-batch writes its portable
+    // signatures, band postings and pairs as a batchId-keyed one-batch
+    // run, overwritten idempotently with its marker last (band postings
+    // one flat directory per run, sorted on MinHashLsh.pb), probes ONLY
+    // the posting row groups its own band keys touch (a static
+    // pb IN (...) filter pruned from the parquet footers — the standing
+    // corpus is never rescanned), and emits its
     // new candidate pairs (new×old + new×new per bucket). Pair emission
     // is symmetric and the occupancy cap is applied against FINAL
     // occupancy at publish, so the accumulated result == the ONE-SHOT banded query

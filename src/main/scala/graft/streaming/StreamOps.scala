@@ -621,11 +621,13 @@ object StreamOps {
     }
 
   /** Test/ops instrumentation for the tiered fold: per targetDir, the
-    * cumulative BATCH-SPAN of all fold/merge inputs (an L0 fold of t
-    * tails adds t; a tier merge of runs covering s batches adds s).
-    * Each batch's postings are re-written once per tier they climb, so
-    * this sum is O(N·log N) in stream age N — the quadratic-write fix
-    * StreamingSpec pins. One counter per targetDir, not state.
+    * cumulative BATCH-SPAN of all merge inputs (an L0 fold of
+    * compactEvery one-batch runs adds compactEvery; a tier merge of runs
+    * covering s batches adds s; a batch writing its own run adds
+    * nothing). Each batch's postings are re-written once per tier they
+    * climb, so this sum is O(N·log N) in stream age N — the
+    * quadratic-write fix StreamingSpec pins. One counter per targetDir,
+    * not state.
     */
   private[graft] val lshFoldSpans =
     scala.collection.concurrent.TrieMap.empty[String, Long]
@@ -633,47 +635,52 @@ object StreamOps {
   // Managed-name shapes under an lshPairsSink targetDir. Anything NOT
   // matching is a stranger (user temp file, `_bak` copy) and is skipped
   // by discovery and cleanup rather than crashing the stream on a
-  // NumberFormatException from an arbitrary suffix.
+  // NumberFormatException from an arbitrary suffix. Tails `f_<i>` are the
+  // per-batch shape earlier versions wrote: only adopted or swept.
   private val lshTailRx = """^(bands|sigs|inc)_(\d+)$""".r
   private val lshRunRx = """^(cbands|csigs|cinc)_(\d+)_(\d+)$""".r
   private val lshDoneRx = """^cdone_(\d+)_(\d+)$""".r
 
-  // Each family's file schema, declared once and keyed by the family name
-  // the two regexes capture. Every read of the index's own files passes
-  // it, so no root costs a schema-inference job. A band run left in the
-  // earlier hive `pb=<i>` layout reads through the same schema: partition
-  // discovery fills `pb` from its directory names.
-  private[graft] val lshSchema: Map[String, StructType] = {
-    val sigs = "doc_id LONG, sig ARRAY<LONG>"
-    val inc = "b INT, k1 LONG, k2 LONG, id_a LONG, id_b LONG"
-    Map("sigs" -> sigs, "csigs" -> sigs, "inc" -> inc, "cinc" -> inc,
-      "bands" -> "doc_id LONG, b INT, k1 LONG, k2 LONG, pb INT",
-      "cbands" -> "doc_id LONG, b INT, k1 LONG, k2 LONG, src_batch LONG, pb INT")
-      .map { case (f, ddl) => f -> StructType.fromDDL(ddl) }
+  // Each run family's file schema, declared once, so no root costs a
+  // schema-inference job. A one-batch run's `cbands` carries no
+  // `src_batch` column (it would only repeat the batch id); lshRead fills
+  // it. A band run left in the earlier hive `pb=<i>` layout reads through
+  // the same schema: partition discovery fills `pb` from its directory
+  // names.
+  private[graft] val lshSchema: Map[String, StructType] = Map(
+    "csigs" -> "doc_id LONG, sig ARRAY<LONG>",
+    "cinc" -> "b INT, k1 LONG, k2 LONG, id_a LONG, id_b LONG",
+    "cbands" -> "doc_id LONG, b INT, k1 LONG, k2 LONG, src_batch LONG, pb INT")
+    .map { case (f, ddl) => f -> StructType.fromDDL(ddl) }
+
+  /** One family of `runs`, read with the family's schema; no runs read as
+    * an empty frame of it. `csigs`/`cinc` are one multi-path read, so the
+    * scan packs the runs' small files into a few splits (and a merge
+    * writes as few). `cbands` is read per run and unioned: an earlier
+    * version's hive run beside flat runs in one read call would break
+    * partition discovery, and a missing `src_batch` is filled with that
+    * run's `lo`.
+    */
+  private def lshRead(spark: SparkSession, targetDir: String, family: String,
+      runs: Seq[(Long, Long)]): DataFrame = {
+    val read = spark.read.schema(lshSchema(family))
+    def root(r: (Long, Long)) = s"$targetDir/${family}_${r._1}_${r._2}"
+    if (runs.isEmpty)
+      spark.createDataFrame(java.util.List.of[Row](), lshSchema(family))
+    else if (family != "cbands") read.parquet(runs.map(root): _*)
+    else runs.map(r => read.parquet(root(r))
+        .withColumn("src_batch", coalesce(col("src_batch"), lit(r._1))))
+      .reduce(_.unionByName(_))
   }
 
-  /** `roots` of one index family, each read with the family's schema and
-    * unioned; no roots read as an empty frame of that schema. One read per
-    * root: a hive run beside flat roots in one read call would break
-    * partition discovery.
-    */
-  private def lshRead(spark: SparkSession, family: String,
-      roots: Seq[String]): DataFrame =
-    if (roots.isEmpty)
-      spark.createDataFrame(java.util.List.of[Row](), lshSchema(family))
-    else roots.map(spark.read.schema(lshSchema(family)).parquet(_))
-      .reduce(_.unionByName(_))
-
-  /** Compacted-run discovery for [[lshPairsSink]]/[[lshPairsRead]]:
-    * marker-gated batch ranges. A run `c*_<lo>_<hi>` is DONE iff its
-    * `cdone_<lo>_<hi>` marker exists (written only after all three
-    * family dirs land — a half-written run is invisible); it is VISIBLE
-    * iff done and not strictly contained in another done run (a tier
-    * merge writes the containing run's marker LAST, so the narrow runs
-    * flip invisible atomically with the wide one appearing). Visible
-    * runs tile `[0, hi]` disjointly; a batch-suffixed tail `f_<i>` is
-    * LIVE iff `i > hi` — anything ≤ hi is a folded original or a replay
-    * stray, swept by [[lshCleanup]] and ignored by every reader.
+  /** Run discovery for [[lshPairsSink]]/[[lshPairsRead]]: marker-gated
+    * batch ranges. A run `c*_<lo>_<hi>` is DONE iff its `cdone_<lo>_<hi>`
+    * marker exists (written only after all three family dirs land — a
+    * half-written run is invisible); it is VISIBLE iff done and not
+    * strictly contained in another done run (a merge writes the wide
+    * run's marker LAST, so the narrow runs flip invisible atomically with
+    * the wide one appearing). Visible runs are disjoint; every reader
+    * reads them and nothing else.
     */
   private def lshVisibleRuns(fs: org.apache.hadoop.fs.FileSystem,
       targetDir: String): Seq[(Long, Long)] = {
@@ -687,95 +694,129 @@ object StreamOps {
     }.sortBy(_._1)
   }
 
-  /** Delete superseded roots: tier-merged (contained) runs plus their
-    * markers, marker-less compacted dirs (a crashed fold's half-written
-    * garbage — never visible, rewritten on retry), and any
-    * batch-suffixed tail already covered by `hi` (folded originals plus
-    * replay strays). Unrecognized names are left alone. Re-runnable
-    * after any crash window — every step is exists-then-delete.
+  /** Adopt, then sweep; returns the visible runs. Both entry points call
+    * it first. ADOPTION: a live tail of an earlier version (`bands_<i>`,
+    * `sigs_<i>`, `inc_<i>` with i above every visible run) becomes the
+    * one-batch run `c*_<i>_<i>` by rename, its marker written last; a
+    * rerun after a crash between the renames skips the families already
+    * renamed, and a tail replaces a marker-less run of the same name. A
+    * tail missing a family (its batch crashed; it replays) gets no
+    * marker. CLEANUP: merged (contained) runs and their markers,
+    * marker-less run dirs (a crashed write's garbage, rewritten on
+    * retry) and every tail name left (folded originals, replay strays)
+    * are deleted; unrecognized names are left alone. Every step is
+    * exists-then-act, so the whole pass re-runs after any crash.
     */
-  private def lshCleanup(fs: org.apache.hadoop.fs.FileSystem,
-      targetDir: String, visible: Seq[(Long, Long)], hi: Long): Unit = {
+  private def lshSettle(fs: org.apache.hadoop.fs.FileSystem,
+      targetDir: String): Seq[(Long, Long)] = {
+    val dir = new Path(targetDir)
+    if (!fs.exists(dir)) return Nil
+    def names = fs.listStatus(dir).map(_.getPath.getName).toSeq
+    def must(ok: Boolean, what: String) =
+      Swap.must(ok, s"lshPairsSink: $what under $targetDir")
+    val hi = lshVisibleRuns(fs, targetDir).map(_._2).foldLeft(-1L)(math.max)
+    names.collect { case lshTailRx(_, i) if i.toLong > hi => i.toLong }
+      .distinct.sorted.foreach { i =>
+        val adopted = Seq("bands", "sigs", "inc").map { f =>
+          val tail = new Path(dir, s"${f}_$i")
+          val run = new Path(dir, s"c${f}_${i}_$i")
+          if (fs.exists(tail)) {
+            if (fs.exists(run)) must(fs.delete(run, true), s"delete ${run.getName}")
+            must(fs.rename(tail, run), s"adopt ${tail.getName}")
+          }
+          fs.exists(run)
+        }
+        if (adopted.forall(identity))
+          fs.create(new Path(dir, s"cdone_${i}_$i"), true).close()
+      }
+    val visible = lshVisibleRuns(fs, targetDir)
     val keep = visible.toSet
-    fs.listStatus(new Path(targetDir)).map(_.getPath).foreach { p =>
-      val dead = p.getName match {
+    names.foreach { n =>
+      val dead = n match {
         case lshDoneRx(lo, h) => !keep((lo.toLong, h.toLong))
         case lshRunRx(_, lo, h) => !keep((lo.toLong, h.toLong))
-        case lshTailRx(_, i) => i.toLong <= hi
+        case lshTailRx(_, _) => true
         case _ => false
       }
-      if (dead) Swap.must(fs.delete(p, true),
-        s"lshPairsSink: cleanup delete ${p.getName} under $targetDir")
+      if (dead) must(fs.delete(new Path(dir, n), true), s"cleanup delete $n")
     }
+    visible
   }
 
-  /** Band postings, written the same way everywhere (per-batch tail, L0
-    * fold, tier merge): ONE directory, range-partitioned and sorted on
-    * pb, so the probe's static `pb IN (...)` prunes at row-group
-    * granularity from the footers. A hive `pb=<i>` tree would prune
-    * whole directories instead, but costs numBands·keyBuckets (1024 at
-    * the default keyBuckets 64) directory commits per write and as many
-    * listings per read, and it prunes little: a batch of d documents
-    * touches about 1 − e^(−d/keyBuckets) of the pb values. Measured with
-    * [[graft.LshFlatnessProbe]] (24 batches, compactEvery 4, tierFanout
-    * 2, keyBuckets 64, 4-core host), hive runs against flat ones: 208
-    * documents per batch (sf0.1, 94-97% of pb touched) 195 s against
-    * 71 s, every batch after the first hive run 12-36 s against 2-3 s;
-    * 21 documents per batch (sf0.01, 27-29% touched, where directory
-    * pruning should pay most) 137 s against 63 s.
+  /** Band postings, written the same way in every run: ONE directory,
+    * range-partitioned and sorted on pb, so the probe's static
+    * `pb IN (...)` prunes at row-group granularity from the footers. A
+    * hive `pb=<i>` tree would prune whole directories instead, but costs
+    * numBands·keyBuckets (1024 at the default keyBuckets 64) directory
+    * commits per write and as many listings per read, and it prunes
+    * little: a batch of d documents touches about 1 − e^(−d/keyBuckets)
+    * of the pb values. Measured over 24 batches (compactEvery 4,
+    * tierFanout 2, keyBuckets 64, 4-core host), hive runs against flat
+    * ones: 208 documents per batch (sf0.1, 94-97% of pb touched) 195 s
+    * against 71 s, every batch after the first hive run 12-36 s against
+    * 2-3 s; 21 documents per batch (sf0.01, 27-29% touched, where
+    * directory pruning should pay most) 137 s against 63 s.
     */
   private def writeBands(df: DataFrame, dest: String): Unit =
     df.repartitionByRange(col("pb")).sortWithinPartitions(col("pb"))
       .write.mode("overwrite").parquet(dest)
 
-  /** One tier-merge sweep for [[lshPairsSink]]'s LSM-shaped fold: while
-    * `fanout` adjacent visible runs share a size class (size classes are
-    * geometric — class t covers spans in [u·fanout^t, u·fanout^(t+1))
-    * for L0 unit u = compactEvery), merge the OLDEST such window into
-    * one run of the next class. Each batch's postings therefore climb
-    * at most log_fanout(N/u) tiers over the stream's life — cumulative
-    * fold write volume O(N·log N), vs the O(N²) of re-writing one
-    * standing generation every compactEvery batches — while the probe
-    * reads ≤ (fanout-1)·tiers + compactEvery roots. Runs idempotently
-    * OUTSIDE the `batchId % compactEvery` window too, so a crash
-    * between an L0 fold's marker and its carry merges heals on the next
-    * batch instead of leaving an over-full tier forever. Crash-safe the
-    * same versioned-swap way as the L0 fold: overwrite the wide run's
-    * three dirs, marker LAST, sweep the narrow runs after.
+  /** The one run writer: run `lo..hi`'s three family dirs, overwritten,
+    * then its `cdone_` marker LAST, so the run appears atomically.
+    */
+  private def writeRun(fs: org.apache.hadoop.fs.FileSystem, targetDir: String,
+      lo: Long, hi: Long, bands: DataFrame, sigs: DataFrame,
+      inc: DataFrame): Unit = {
+    writeBands(bands, s"$targetDir/cbands_${lo}_$hi")
+    sigs.write.mode("overwrite").parquet(s"$targetDir/csigs_${lo}_$hi")
+    inc.write.mode("overwrite").parquet(s"$targetDir/cinc_${lo}_$hi")
+    fs.create(new Path(s"$targetDir/cdone_${lo}_$hi"), true).close()
+  }
+
+  /** The one merge routine of [[lshPairsSink]]'s LSM-shaped fold. Size
+    * classes are geometric in the L0 unit u = compactEvery: class t covers
+    * spans in [u·fanout^t, u·fanout^(t+1)), and spans below u (the
+    * one-batch runs, when u > 1) form class −1. While a window of
+    * adjacent visible runs shares a class and is full — u runs in class
+    * −1 (the L0 fold), `fanout` runs in a class t ≥ 0 (a tier merge) —
+    * merge the OLDEST such window into one run. At u = 1 a one-batch run
+    * already is an L0 run, so every merge is a tier merge. Each batch's
+    * postings therefore climb at most log_fanout(N/u) + 1 times over the
+    * stream's life — cumulative write volume O(N·log N), vs the O(N²) of
+    * re-writing one standing generation every u batches — while the probe
+    * reads ≤ (fanout-1)·tiers + u roots. Idempotent whenever it runs, so
+    * a crash between a merge's marker and the merges it carries into
+    * heals on the next batch. Crash-safe through [[writeRun]] (marker
+    * last) and the sweep after each merge.
     */
   private def lshMergeTiers(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, targetDir: String,
       compactEvery: Int, fanout: Int): Unit = {
+    val unit = math.max(1, compactEvery)
     def sizeClass(r: (Long, Long)): Int = {
-      var span = (r._2 - r._1 + 1) / math.max(1, compactEvery)
-      var t = 0
-      while (span >= fanout) { span /= fanout; t += 1 }
+      var span = (r._2 - r._1 + 1) / unit
+      var t = if (span == 0) -1 else 0
+      while (fanout > 1 && span >= fanout) { span /= fanout; t += 1 }
       t
     }
-    var progressed = true
-    while (progressed) {
-      progressed = false
-      val visible = lshVisibleRuns(fs, targetDir)
-      visible.sliding(fanout).find(w =>
-          w.size == fanout && w.map(sizeClass).distinct.size == 1)
-        .foreach { w =>
-          val (lo, hi) = (w.head._1, w.last._2)
-          def merge(family: String): Unit = {
-            val all = lshRead(spark, family,
-              w.map { case (l, h) => s"$targetDir/${family}_${l}_$h" })
-            val dest = s"$targetDir/${family}_${lo}_$hi"
-            if (family == "cbands") writeBands(all, dest)
-            else all.write.mode("overwrite").parquet(dest)
-          }
-          merge("cbands"); merge("csigs"); merge("cinc")
-          fs.create(new Path(s"$targetDir/cdone_${lo}_$hi"), true).close()
-          lshFoldSpans.updateWith(targetDir)(p =>
-            Some(p.getOrElse(0L) + (hi - lo + 1)))
-          val vis = lshVisibleRuns(fs, targetDir)
-          lshCleanup(fs, targetDir, vis,
-            vis.map(_._2).foldLeft(-1L)(math.max))
-          progressed = true
-        }
+    def width(cls: Int) = if (cls < 0) unit else fanout
+    // Adjacency matters: a replay drops its own marker first, and a window
+    // across that gap would claim the batch's range without its postings.
+    def due(w: Seq[(Long, Long)]) = {
+      val cls = w.map(sizeClass).distinct
+      cls.size == 1 && w.size == width(cls.head) && w.size > 1 &&
+        w.zip(w.tail).forall { case (a, b) => b._1 == a._2 + 1 }
+    }
+    def oldestDue(visible: Seq[(Long, Long)]) = visible.indices.iterator
+      .map(i => visible.slice(i, i + width(sizeClass(visible(i))))).find(due)
+    var window = oldestDue(lshVisibleRuns(fs, targetDir))
+    while (window.nonEmpty) {
+      val w = window.get
+      val (lo, hi) = (w.head._1, w.last._2)
+      writeRun(fs, targetDir, lo, hi, lshRead(spark, targetDir, "cbands", w),
+        lshRead(spark, targetDir, "csigs", w), lshRead(spark, targetDir, "cinc", w))
+      lshFoldSpans.updateWith(targetDir)(p => Some(p.getOrElse(0L) + (hi - lo + 1)))
+      window = oldestDue(lshSettle(fs, targetDir))
     }
   }
 
@@ -784,16 +825,16 @@ object StreamOps {
     * maintaining a persisted band index incrementally. Unlike
     * [[graft.operators.LshIndex.append]], which adds files to the
     * partition directories of one hive-partitioned tree, each
-    * micro-batch writes its portable signatures and band postings as
-    * batchId-keyed flat directories it OVERWRITES (idempotent under
-    * at-least-once replay — a plain `append` to one index tree would
-    * double postings on a batch re-run), the posting files
+    * micro-batch `b` writes its portable signatures, band postings and
+    * candidate pairs as the ONE-BATCH RUN `csigs_/cbands_/cinc_<b>_<b>`,
+    * overwritten (idempotent under at-least-once replay — a plain
+    * `append` to one index tree would double postings on a batch re-run),
+    * and writes its `cdone_<b>_<b>` marker last. The posting files are
     * range-partitioned and sorted on
-    * `pb = band·keyBuckets + (k1 mod keyBuckets)` ([[MinHashLsh.pb]])
-    * so the probe against the standing corpus reads ONLY the row groups
-    * the batch's own band keys touch (a static `pb IN (...)` filter
-    * pruned from the parquet footers — the standing corpus is never
-    * rescanned).
+    * `pb = band·keyBuckets + (k1 mod keyBuckets)` ([[MinHashLsh.pb]]) so
+    * the probe against the standing corpus reads ONLY the row groups the
+    * batch's own band keys touch (a static `pb IN (...)` filter pruned
+    * from the parquet footers — the standing corpus is never rescanned).
     *
     * Pair emission is EXACT against the one-shot batch query over the
     * union, for any batch boundaries and any arrival order (pairs are
@@ -806,32 +847,40 @@ object StreamOps {
     * either way. In-flight emission is therefore bounded by
     * maxBucket² per bucket lifetime, never duplicate-family².
     *
-    * LONG-RUN posture — a TIERED (LSM-shaped) fold: every
-    * `compactEvery` batches the per-batch snapshots fold into a NEW L0
-    * run `cbands_<lo>_<hi>` (pb-sorted like the tails, so the pruned
-    * probe holds at any stream age) + `csigs_/cinc_<lo>_<hi>`, gated by
-    * a `cdone_<lo>_<hi>` marker written only after all three land; the
-    * folded tails are then deleted. When `tierFanout` adjacent runs
-    * share a geometric size class, [[lshMergeTiers]] merges them into
-    * one run of the next class (marker last, narrow runs swept after) —
-    * so each batch's postings are re-written at most
-    * log_fanout(N/compactEvery) times over the stream's life.
-    * Cumulative fold write volume is O(N·log N) in stream age N; the
-    * r14 single-standing-generation fold re-wrote the FULL corpus every
-    * compactEvery batches (quadratic cumulative volume, and each fold
-    * stalled the stream for a corpus-sized rewrite — the r14 verdict's
-    * scale-killer). A probe reads ≤ (tierFanout-1)·tiers + compactEvery
-    * roots — logarithmic, vs O(batchId) without folding. Replay stays
-    * byte-identical through folding and merging: compacted postings
-    * carry their origin batch in `src_batch`, so a replayed batch
-    * N ≤ hi probes `filter(src_batch < N)` over the visible runs —
-    * exactly the prior-corpus rows its first run saw — and its
-    * re-written `bands_N/sigs_N/inc_N` strays are ignored by every
-    * reader (live iff id > hi) and swept by the next cleanup. Folds and
-    * merges are crash-safe the versioned-swap way: overwrites of NEW
-    * run dirs, marker last, every reader gated on markers; a
-    * half-written run is invisible, its garbage swept, and the merge
-    * pass re-runs idempotently on the next batch.
+    * ONE ROOT KIND: the index is a set of marker-gated runs and nothing
+    * else; the probe, the merges and the publish read visible runs only.
+    * [[lshMergeTiers]] folds every `compactEvery` one-batch runs into an
+    * L0 run and, when `tierFanout` adjacent runs share a geometric size
+    * class, merges them into one run of the next class — so each batch's
+    * postings are re-written at most log_fanout(N/compactEvery) + 1 times
+    * over the stream's life (cumulative write volume O(N·log N) in stream
+    * age N, where the r14 single-standing-generation fold re-wrote the
+    * FULL corpus every compactEvery batches), and a probe reads
+    * ≤ (tierFanout-1)·tiers + compactEvery roots, vs O(batchId) without
+    * folding. Merged runs carry each posting's origin batch in
+    * `src_batch` (a one-batch run leaves it implicit; reads fill it).
+    *
+    * Each batch, in this order:
+    *  1. adopt and sweep ([[lshSettle]]): an earlier version's live
+    *     per-batch tails become one-batch runs (rename, marker last),
+    *     superseded and marker-less roots are deleted;
+    *  2. drop its own stale `cdone_<b>_<b>`, so a replay never merges a
+    *     run it is about to rewrite;
+    *  3. the merge pass — before the batch writes its run, because a
+    *     merge's sweep deletes marker-less run dirs;
+    *  4. check the one missing-snapshot rule: the visible runs starting
+    *     before `b` tile [0, hi] from 0 with hi ≥ b-1, else the target
+    *     was lost ("wipe the checkpoint and replay" — not a cold start);
+    *  5. probe those runs, `src_batch < b` — a no-op in forward progress,
+    *     the exact prior corpus when a batch whose run is already merged
+    *     replays (its rewritten run is contained, so invisible, and swept
+    *     by the next batch);
+    *  6. write its one-batch run ([[writeRun]], marker last).
+    *
+    * Every write is an overwrite of a named run dir with the marker last,
+    * and every reader is gated on markers: a half-written run is
+    * invisible, its garbage swept, and the merge pass re-runs
+    * idempotently on the next batch.
     */
   def lshPairsSink(
       docs: DataFrame,
@@ -850,107 +899,43 @@ object StreamOps {
         val bkt = Seq("b", "k1", "k2")
         val fs = new Path(targetDir)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val visible0 = lshVisibleRuns(fs, targetDir)
-        val hi = visible0.map(_._2).foldLeft(-1L)(math.max)
-        if (fs.exists(new Path(targetDir)))
-          lshCleanup(fs, targetDir, visible0, hi)
+        lshSettle(fs, targetDir)
+        // A replay never merges the run it is about to rewrite; and the
+        // merge pass runs before this batch writes, since a merge's sweep
+        // deletes marker-less run dirs.
+        val own = new Path(s"$targetDir/cdone_${batchId}_$batchId")
+        if (fs.exists(own)) Swap.must(fs.delete(own, true),
+          s"lshPairsSink: delete ${own.getName} under $targetDir")
+        if (compactEvery > 0)
+          lshMergeTiers(spark, fs, targetDir, compactEvery, tierFanout)
+        // The one missing-snapshot check: a gap is a lost target, not a
+        // cold start (the quotaSink discipline).
+        val prior = lshVisibleRuns(fs, targetDir).filter(_._1 < batchId)
+        val hi = prior.lastOption.fold(-1L)(_._2)
+        if (prior.map(_._1) != (0L +: prior.map(_._2 + 1)).take(prior.size) ||
+            hi < batchId - 1)
+          throw new IllegalStateException(
+            s"lshPairsSink: runs ${prior.mkString(" ")} under $targetDir do " +
+              s"not cover batches 0..${batchId - 1} at batch $batchId — wipe " +
+              "the checkpoint and replay")
         // Already a local checkpoint: the batch is hashed once.
         val sigs = MinHashLsh.portableMinhashSig(batch)
-        // A folded batch's replay still overwrites its own snapshots
-        // (idempotent, deterministic) — readers ignore ids ≤ hi, so the
-        // strays are dead weight until the next cleanup, never input.
-        sigs.write.mode("overwrite").parquet(s"$targetDir/sigs_$batchId")
         val bands = graft.operators.Materialize(MinHashLsh.portableBands(sigs)
           .withColumn("pb", MinHashLsh.pb(col("b"), col("k1"), keyBuckets)))
-        writeBands(bands, s"$targetDir/bands_$batchId")
-        // L0 fold due? Covers batches hi+1..batchId-1 (never the current
-        // batch: the probe's prior-corpus join excludes own postings, and
-        // a compacted run containing them would self-pair).
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0 &&
-            hi < batchId - 1) {
-          val lo = hi + 1; val newHi = batchId - 1
-          def tail(prefix: String): Seq[(Long, String)] =
-            (lo to newHi).map { i =>
-              val p = new Path(s"$targetDir/$prefix$i")
-              if (!fs.exists(p))
-                throw new IllegalStateException(
-                  s"lshPairsSink: snapshot $p missing while folding at " +
-                    s"batch $batchId — wipe the checkpoint and replay")
-              i -> p.toString
-            }
-          // An L0 run folds ONLY the tails — never the standing runs;
-          // standing-run rewrites happen one tier at a time in
-          // lshMergeTiers (the O(N log N) contract).
-          writeBands(
-            tail("bands_").map { case (i, p) =>
-                lshRead(spark, "bands", Seq(p))
-                  .select(col("doc_id"), col("b"), col("k1"), col("k2"),
-                    lit(i).as("src_batch"), col("pb"))
-              }
-              .reduce(_.unionByName(_)),
-            s"$targetDir/cbands_${lo}_$newHi")
-          def foldPlain(family: String): Unit =
-            lshRead(spark, family, tail(s"${family}_").map(_._2))
-              .write.mode("overwrite")
-              .parquet(s"$targetDir/c${family}_${lo}_$newHi")
-          foldPlain("sigs")
-          foldPlain("inc")
-          // Marker LAST: the new run becomes visible atomically; then
-          // sweep the folded tails.
-          fs.create(new Path(s"$targetDir/cdone_${lo}_$newHi"), true).close()
-          lshFoldSpans.updateWith(targetDir)(p =>
-            Some(p.getOrElse(0L) + (newHi - lo + 1)))
-          val vis = lshVisibleRuns(fs, targetDir)
-          lshCleanup(fs, targetDir, vis, newHi)
-        }
-        // Carry pass — also heals a crash window between an L0 fold's
-        // marker and its tier merges (idempotent no-op when nothing is
-        // due).
-        if (compactEvery > 0 && tierFanout > 1)
-          lshMergeTiers(spark, fs, targetDir, compactEvery, tierFanout)
-        val runsNow = lshVisibleRuns(fs, targetDir)
-        val hiNow = runsNow.map(_._2).foldLeft(-1L)(math.max)
-        // Standing-corpus postings, partition-pruned to the batch's own
-        // band keys (≤ numBands·keyBuckets distinct pb values, collected
-        // as static literals): the compacted generation (src_batch <
-        // batchId — a no-op filter in forward progress, the exact replay
-        // cut for a re-run of a folded batch) plus the un-folded tails
-        // strictly before this batch. Missing tails = lost target dir,
-        // not a cold start (the quotaSink discipline).
-        val tailDirs = (((hiNow + 1) max 0L) until batchId).map { i =>
-          val p = new Path(s"$targetDir/bands_$i")
-          if (!fs.exists(p))
-            throw new IllegalStateException(
-              s"lshPairsSink: posting snapshot $p missing for batch " +
-                s"$batchId — wipe the checkpoint and replay")
-          p.toString
-        }
+        // Standing-corpus postings, pruned to the batch's own band keys
+        // (≤ numBands·keyBuckets distinct pb values, collected as static
+        // literals; each run's row groups prune independently). The
+        // src_batch cut is a no-op in forward progress and the exact prior
+        // corpus when a batch whose run is already merged replays.
         val pbs = bands.select("pb").distinct().collect()
           .map(_.getInt(0)).sorted
-        // Per-root reads + union (lshRead); the static pb filter prunes
-        // each root's row groups independently. The src_batch < batchId
-        // cut is a no-op in forward progress and the exact prior-corpus
-        // reconstruction when a FOLDED batch replays
-        // (hiNow ≥ batchId: fresh checkpoint over an intact folded
-        // target — the standing runs hold more than this batch's past;
-        // runs entirely at/after this batch are skipped outright).
-        val priorParts =
-          runsNow.filter(_._1 < batchId).map { case (lo, h) =>
-            lshRead(spark, "cbands", Seq(s"$targetDir/cbands_${lo}_$h"))
-              .filter(col("pb").isin(pbs.map(Int.box): _*))
-              .filter(col("src_batch") < batchId)
-              .select("doc_id", "b", "k1", "k2")
-          } ++
-          tailDirs.map(p => lshRead(spark, "bands", Seq(p))
-            .filter(col("pb").isin(pbs.map(Int.box): _*))
-            .select("doc_id", "b", "k1", "k2"))
-        recordProbeRoots(targetDir, batchId, priorParts.size)
-        val prior =
-          if (priorParts.isEmpty)
-            bands.select(col("doc_id"), col("b"), col("k1"), col("k2")).limit(0)
-          else priorParts.reduce(_.unionByName(_))
+        recordProbeRoots(targetDir, batchId, prior.size)
+        val old = lshRead(spark, targetDir, "cbands", prior)
+          .filter(col("pb").isin(pbs.map(Int.box): _*))
+          .filter(col("src_batch") < batchId)
+          .select("doc_id", "b", "k1", "k2")
         val bn = bands.select("doc_id", "b", "k1", "k2")
-        val occOk = bn.unionByName(prior)
+        val occOk = bn.unionByName(old)
           .groupBy(bkt.map(col): _*).agg(count(lit(1)).as("occ"))
           .filter(col("occ") <= maxBucket)
           .select(bkt.map(col): _*)
@@ -958,15 +943,15 @@ object StreamOps {
           .join(bn.toDF("id_b", "b", "k1", "k2"), bkt)
           .filter(col("id_a") < col("id_b"))
         val no = bn.toDF("id_x", "b", "k1", "k2")
-          .join(prior.toDF("id_y", "b", "k1", "k2"), bkt)
+          .join(old.toDF("id_y", "b", "k1", "k2"), bkt)
           .select(col("b"), col("k1"), col("k2"),
             least(col("id_x"), col("id_y")).as("id_a"),
             greatest(col("id_x"), col("id_y")).as("id_b"))
-        nn.select(col("b"), col("k1"), col("k2"), col("id_a"), col("id_b"))
+        val pairs = nn.select(col("b"), col("k1"), col("k2"), col("id_a"), col("id_b"))
           .unionByName(no)
           .join(occOk, bkt)
           .distinct()
-          .write.mode("overwrite").parquet(s"$targetDir/inc_$batchId")
+        writeRun(fs, targetDir, batchId, batchId, bands, sigs, pairs)
         ()
       }
       .start()
@@ -986,9 +971,13 @@ object StreamOps {
     * through the scoring join (the exact tier's cost), but it
     * aggregates away immediately instead of materializing.
     *
+    * Reads the visible runs only (a log-bounded root count at any stream
+    * age), after the same adopt-and-sweep as the sink ([[lshSettle]]), so
+    * a target an earlier version wrote publishes from runs too.
+    *
     * CONCURRENCY: do not run against a targetDir with an ACTIVE sink —
-    * a fold/merge sweeps superseded runs after its marker lands, so a
-    * reader that resolved the visible-run set just before a fold can
+    * a merge sweeps superseded runs after its marker lands, so a
+    * reader that resolved the visible-run set just before a merge can
     * hit FileNotFoundException on the swept paths mid-scan. Publish
     * between stream stops (the AvailableNow discipline every caller
     * here uses), or retry on a fresh listing.
@@ -1000,34 +989,17 @@ object StreamOps {
   def lshPairsRead(spark: SparkSession, targetDir: String,
       maxBucket: Int = 100, minAgree: Int = 16): DataFrame = {
     val bkt = Seq("b", "k1", "k2")
-    val dir = new Path(targetDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val runs = lshVisibleRuns(fs, targetDir)
-    val hi = runs.map(_._2).foldLeft(-1L)(math.max)
-    val names =
-      if (fs.exists(dir)) fs.listStatus(dir).map(_.getPath.getName).toSeq
-      else Nil
-    // Visible tiered runs + live tails (id > hi) per family —
-    // log-bounded root count at any stream age, and replay strays
-    // (re-written snapshots of folded batches) are invisible by the
-    // same cut. Non-managed names under targetDir are skipped, not
-    // parsed.
-    def family(f: String): DataFrame = {
-      val tails = names.collect {
-        case n @ lshTailRx(`f`, i) if i.toLong > hi => s"$targetDir/$n" }
-      lshRead(spark, "c" + f,
-          runs.map { case (lo, h) => s"$targetDir/c${f}_${lo}_$h" })
-        .select(lshSchema(f).fieldNames.map(col): _*)
-        .unionByName(lshRead(spark, f, tails))
-    }
-    val occOk = family("bands")
+    val fs = new Path(targetDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val runs = lshSettle(fs, targetDir)
+    val occOk = lshRead(spark, targetDir, "cbands", runs)
       .groupBy(bkt.map(col): _*).agg(count(lit(1)).as("occ"))
       .filter(col("occ") <= maxBucket)
       .select(bkt.map(col): _*)
-    val pairs = family("inc")
+    val pairs = lshRead(spark, targetDir, "cinc", runs)
       .join(occOk, bkt)
       .select("id_a", "id_b").distinct()
-    val sigs = family("sigs")
+    val sigs = lshRead(spark, targetDir, "csigs", runs)
     val pk = lit(10000000000L)
     pairs
       .join(sigs.toDF("id_a", "sa"), "id_a")

@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The library depends on the query inventory nowhere: operators,
   * streaming sinks, sources, SQL functions, plan rules, config and the
   * Runner orchestrator must not refer to `graft.queries` (operator code
-  * lives in `operators/`; `queries/` only wires it to tables).
+  * lives in `operators/`; `queries/` only wires it to tables). And the
+  * only entry points are the board, the oracle run and the operator
+  * tools: no dev-probe main.
   */
 class LayeringSpec extends AnyFunSuite {
 
@@ -34,5 +36,20 @@ class LayeringSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"library files referring to graft.queries: ${offenders.mkString(", ")}")
+  }
+
+  test("the only objects in src/main with a main method are the five entry points") {
+    val objectRx = """^\s*(?:private\s+)?object\s+(\w+).*""".r
+    val mains = scalaFiles(Paths.get("src/main")).flatMap { f =>
+      // The object a `def main` belongs to is the last one opened above it.
+      var current: Option[String] = None
+      new String(Files.readAllBytes(f), "UTF-8").linesIterator.flatMap {
+        case objectRx(name) => current = Some(name); None
+        case l if l.trim.startsWith("def main(") => current.orElse(Some(s"? in $f"))
+        case _ => None
+      }.toList
+    }
+    assert(mains.sorted == Seq("Bench", "PlanDump", "RunOne", "ScaleGen", "Verify"),
+      s"objects with def main: ${mains.sorted.mkString(", ")}")
   }
 }

@@ -114,6 +114,14 @@ class StreamingSpec extends AnyFunSuite {
     } finally walk.close()
   }
 
+  /** Names directly under an LSH target in the per-batch tail shape
+    * (`bands_<i>`, `sigs_<i>`, `inc_<i>`) earlier versions wrote; the
+    * sink adopts or sweeps every one of them.
+    */
+  private def tailNames(target: String): Seq[String] =
+    Option(new java.io.File(target).listFiles()).getOrElse(Array.empty)
+      .map(_.getName).filter(_.matches("""(bands|sigs|inc)_\d+""")).toSeq.sorted
+
   test("streaming Count-Min sketch equals the batch sketch over all drops") {
     val dir = stageDrops(3)
     val stream = StreamOps.countMinStream(
@@ -530,27 +538,29 @@ class StreamingSpec extends AnyFunSuite {
     StreamOps.lshProbeRoots.remove(out)
     runStream(s"$dir/ckpt1")
     // THE compaction contract: the probe never reads more than
-    // compactEvery roots here (two L0 runs + < compactEvery tails; no
+    // compactEvery roots here (L0 runs + < compactEvery one-batch runs; no
     // tier merge fires below tierFanout runs), however many batches the
     // stream has seen — vs O(batchId) before.
     val rootCounts = StreamOps.lshProbeRoots(out).map(_._2)
     assert(rootCounts.size == n && rootCounts.max <= compactEvery,
       s"probe root counts $rootCounts exceed compactEvery=$compactEvery")
-    // Layout after L0 folds at batch 3 (run 0..2) and 6 (run 3..5): two
-    // visible runs (below the default tierFanout=4, so no merge), only
-    // the un-folded tail snapshots remain.
+    // Layout after L0 folds at batch 3 (run 0..2) and 6 (run 3..5), then
+    // batch 6's own one-batch run: three visible runs (below the default
+    // tierFanout=4, so no merge); the folded one-batch runs are swept.
     def names = new java.io.File(out).listFiles().map(_.getName).toSet
-    assert(names.count(_.startsWith("cdone_")) == 2 &&
-      names("cdone_0_2") && names("cdone_3_5"))
+    assert(names.filter(_.startsWith("cdone_")) ==
+      Set("cdone_0_2", "cdone_3_5", "cdone_6_6"), s"unexpected layout $names")
     assert(names("cbands_3_5") && names("csigs_3_5") && names("cinc_3_5"))
-    assert(names.filter(_.startsWith("bands_")) == Set("bands_6"),
-      s"folded band snapshots not swept: $names")
+    assert(names("cbands_6_6") && names("csigs_6_6") && names("cinc_6_6"))
+    assert(!names("cbands_5_5"), s"folded one-batch runs not swept: $names")
+    assert(tailNames(out).isEmpty, s"tail names under $out")
     val first = StreamOps.lshPairsRead(spark, out).orderBy("id").collect().toSeq
     assert(first == oneShotLshFlags(docs) && first.nonEmpty)
     // Full replay over the intact FOLDED target (fresh checkpoint): each
     // replayed batch reconstructs its prior corpus via the src_batch cut
-    // of the standing generation; re-written snapshots of folded batches
-    // are ignored by every reader. Byte-identical publish.
+    // of the standing runs; the re-written one-batch run of a folded
+    // batch is contained in its fold, so no reader sees it. Byte-identical
+    // publish.
     runStream(s"$dir/ckpt2")
     val second = StreamOps.lshPairsRead(spark, out).orderBy("id").collect().toSeq
     assert(first == second)
@@ -584,9 +594,10 @@ class StreamingSpec extends AnyFunSuite {
       math.ceil(math.log(n.toDouble) / math.log(fanout)).toInt + compactEvery
     assert(rootCounts.size == n && rootCounts.max <= logBound,
       s"probe root counts $rootCounts exceed log bound $logBound")
-    // (b) Cumulative fold INPUT span (batches re-written across all L0
-    // folds + tier merges): each batch climbs ≤ log_f(N) tiers, so the
-    // sum is ≤ N·(log_f(N)+1) — here 97 counted vs 276 for the r14
+    // (b) Cumulative fold INPUT span (batches re-written across all tier
+    // merges; at compactEvery=1 a one-batch run already is an L0 run, so
+    // nothing is copied to make one): each batch climbs ≤ log_f(N) tiers,
+    // so the sum is ≤ N·(log_f(N)+1) — here 74 counted vs 276 for the r14
     // full-generation rewrite (Σ k over 23 folds). The quadratic shape
     // would trip this bound from N≈16 on.
     val spans = StreamOps.lshFoldSpans(out)
@@ -596,16 +607,16 @@ class StreamingSpec extends AnyFunSuite {
     assert(spans <= nlogn && spans < quadratic / 2,
       s"fold spans $spans exceed O(N log N) bound $nlogn (quadratic=$quadratic)")
     // (c) Layout: the visible runs are the binary decomposition of the
-    // 23 folded batches (16+4+2+1), each marker-gated, tails swept.
+    // 23 batches before the last (16+4+2+1) plus the last batch's own
+    // one-batch run, each marker-gated; no tail name anywhere.
     def names = new java.io.File(out).listFiles().map(_.getName).toSet
     val runs = names.collect { case s if s.startsWith("cdone_") =>
       val Array(lo, hi) = s.stripPrefix("cdone_").split('_').map(_.toLong)
       (lo, hi)
     }.toSeq.sortBy(_._1)
-    assert(runs == Seq((0L, 15L), (16L, 19L), (20L, 21L), (22L, 22L)),
+    assert(runs == Seq((0L, 15L), (16L, 19L), (20L, 21L), (22L, 22L), (23L, 23L)),
       s"unexpected run set $runs")
-    assert(names.filter(_.startsWith("bands_")) == Set("bands_23"),
-      s"folded band snapshots not swept: $names")
+    assert(tailNames(out).isEmpty, s"tail names under $out")
     // (d) Publish == one-shot batch twin; full replay over the tiered
     // target byte-identical (each replayed batch reconstructs its prior
     // corpus via the src_batch cut across the visible runs).
@@ -615,7 +626,18 @@ class StreamingSpec extends AnyFunSuite {
     // (e) One band layout: every run, the 16-batch one included, is a
     // single pb-sorted directory; no hive `pb=<i>` tree anywhere.
     assert(hiveDirs(out).isEmpty, s"hive pb= directories under $out")
-    // (f) Publish cost: no root costs a schema-inference or hive-listing
+    // (f) The plain families are read in one multi-path read per merge, so
+    // the scan packs a run's small files into about one split per core and
+    // the 16-batch run holds that many files, not a few per batch (8 each
+    // when every root was read separately).
+    val cores = spark.sparkContext.defaultParallelism
+    Seq("csigs_0_15", "cinc_0_15").foreach { run =>
+      val files = new java.io.File(s"$out/$run").listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      info(s"$run: $files files")
+      assert(files <= cores, s"$run holds $files files, more than $cores")
+    }
+    // (g) Publish cost: no root costs a schema-inference or hive-listing
     // job, so the jobs are the publish plan's own — 9 here, against 25
     // with inferred schemas and a hive run 0-15.
     info(s"lshPairsRead + collect over ${runs.size} runs: $publishJobs jobs")
@@ -660,7 +682,7 @@ class StreamingSpec extends AnyFunSuite {
         .awaitTermination()
     }
     def publish() = StreamOps.lshPairsRead(spark, out).orderBy("id").collect().toSeq
-    // Batches 0-5 leave runs 0-3 and 4-4. Rewrite run 0-3 the way earlier
+    // Batches 0-5 leave runs 0-3, 4-4 and 5-5. Rewrite run 0-3 the way earlier
     // versions wrote every run of at least compactEvery·fanout² batches:
     // hive-partitioned by pb, its cdone_ marker kept.
     stageDocDrops(docs, dropD, n, 0 until 6)
@@ -679,13 +701,14 @@ class StreamingSpec extends AnyFunSuite {
     val firstDocs = docs.filter(pmod(col("doc_id"), lit(n.toLong)) < 6)
     val first = publish()
     assert(first == oneShotLshFlags(firstDocs) && first.nonEmpty)
-    // A full replay probes the hive run through the src_batch cut (batch 5
-    // is a live tail, so its pairs are re-published) and leaves it in place.
+    // A full replay probes the hive run through the src_batch cut (its
+    // first batch merges runs 4-4 and 5-5, which batches 4 and 5 then
+    // probe through the same cut) and leaves the hive run in place.
     runStream(s"$dir/ckpt2")
     assert(hiveDirs(run).nonEmpty)
     assert(publish() == first)
-    // Batches 6-11: batches 6 and 7 probe the hive run; batch 8's tier
-    // merge consumes it into run 0-7, written flat.
+    // Batches 6-11: batches 6 and 7 probe the hive run; batch 8's merge
+    // pass consumes it into run 0-7, written flat.
     stageDocDrops(docs, dropD, n, 6 until n)
     runStream(s"$dir/ckpt1")
     def names = new java.io.File(out).listFiles().map(_.getName).toSet
@@ -693,16 +716,143 @@ class StreamingSpec extends AnyFunSuite {
     assert(hiveDirs(out).isEmpty, s"hive pb= directories left under $out")
     val all = publish()
     assert(all == oneShotLshFlags(docs))
+    // Each family's declared schema is what its writer produces, so a
+    // writer change cannot read back as null columns; a one-batch run's
+    // bands leave out only src_batch, which every read fills.
+    assert(StreamOps.lshSchema.keySet == Set("cbands", "csigs", "cinc"))
+    assert(tailNames(out).isEmpty, s"tail names under $out")
+    Seq("0_7", "11_11").foreach { span =>
+      StreamOps.lshSchema.foreach { case (family, schema) =>
+        val expected =
+          if (span == "11_11" && family == "cbands")
+            org.apache.spark.sql.types.StructType(schema.filterNot(_.name == "src_batch"))
+          else schema
+        assert(spark.read.parquet(s"$out/${family}_$span").schema.catalogString ==
+          expected.catalogString, s"${family}_$span schema drifted")
+      }
+    }
     runStream(s"$dir/ckpt3")
     assert(publish() == all)
-    // Each family's declared schema is what its writer produces, so a
-    // writer change cannot read back as null columns.
-    Seq("bands_11", "sigs_11", "inc_11", "cbands_0_7", "csigs_0_7", "cinc_0_7")
-      .foreach { root =>
-        val family = root.takeWhile(_ != '_')
-        assert(spark.read.parquet(s"$out/$root").schema.catalogString ==
-          StreamOps.lshSchema(family).catalogString, s"$family schema drifted")
-      }
+  }
+
+  /** Make micro-batch `b` look as if the sink crashed after its
+    * foreachBatch work and before the checkpoint commit: the next run over
+    * `ckpt` replays `b`.
+    */
+  private def uncommit(ckpt: String, b: Long): Unit =
+    Seq(s"commits/$b", s"commits/.$b.crc").foreach(f =>
+      Files.deleteIfExists(java.nio.file.Paths.get(ckpt, f)))
+
+  /** Cut the largest part file under `dir` to half its bytes: any read of
+    * it fails.
+    */
+  private def truncatePart(dir: String): Unit = {
+    val part = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).maxBy(_.length)
+    val ch = java.nio.channels.FileChannel.open(part.toPath,
+      java.nio.file.StandardOpenOption.WRITE)
+    try ch.truncate(part.length / 2) finally ch.close()
+  }
+
+  test("LSH crash windows: a replayed batch whose run is marker-less, or " +
+      "marked but torn by a crashed rewrite, converges to the one-shot flags") {
+    val dir = Files.createTempDirectory("graft-lshcrash").toString
+    val out = s"$dir/out"; val dropD = s"$dir/drop"; val ckpt = s"$dir/ckpt"
+    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
+    val n = 10
+    def runStream(): Unit = {
+      val src = spark.readStream.schema("doc_id LONG, text STRING")
+        .option("maxFilesPerTrigger", 1).parquet(dropD)
+      StreamOps.lshPairsSink(src, out, ckpt, compactEvery = 1, tierFanout = 2)
+        .awaitTermination()
+    }
+    def upTo(k: Int) = docs.filter(pmod(col("doc_id"), lit(n.toLong)) < k)
+    def names = new java.io.File(out).listFiles().map(_.getName).toSet
+    stageDocDrops(docs, dropD, n, 0 until 6)
+    runStream()
+    assert(names("cdone_4_4") && names("cdone_5_5"), s"unexpected layout $names")
+    // Batch 5 wrote its run and marker, then a second attempt crashed while
+    // rewriting it: marker present, cinc_5_5 torn, checkpoint uncommitted.
+    // The replay drops its own marker before the merge pass, so runs 4-4
+    // and 5-5 are never merged with the torn root in them.
+    uncommit(ckpt, 5)
+    truncatePart(s"$out/cinc_5_5")
+    stageDocDrops(docs, dropD, n, 6 until 8)
+    runStream()
+    assert(StreamOps.lshPairsRead(spark, out).orderBy("id").collect().toSeq ==
+      oneShotLshFlags(upTo(8)))
+    assert(names("cdone_7_7") && tailNames(out).isEmpty, s"unexpected layout $names")
+    // Batch 7 crashed before its marker: its run dirs exist without one
+    // (torn, too). The next run sweeps them and the replay rewrites them.
+    uncommit(ckpt, 7)
+    Files.delete(java.nio.file.Paths.get(out, "cdone_7_7"))
+    truncatePart(s"$out/cbands_7_7")
+    stageDocDrops(docs, dropD, n, 8 until n)
+    runStream()
+    assert(StreamOps.lshPairsRead(spark, out).orderBy("id").collect().toSeq ==
+      oneShotLshFlags(docs))
+    assert(names.filter(_.startsWith("cdone_")) ==
+      Set("cdone_0_7", "cdone_8_8", "cdone_9_9"), s"unexpected layout $names")
+    assert(tailNames(out).isEmpty, s"tail names under $out")
+  }
+
+  test("LSH adoption: live per-batch tails of an earlier version become " +
+      "one-batch runs, idempotently after a crash between renames, through " +
+      "either entry point; folded strays are swept") {
+    val dir = Files.createTempDirectory("graft-lshadopt").toString
+    val out = s"$dir/out"; val dropD = s"$dir/drop"; val ckpt = s"$dir/ckpt"
+    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
+    val n = 8
+    def runStream(target: String): Unit = {
+      val src = spark.readStream.schema("doc_id LONG, text STRING")
+        .option("maxFilesPerTrigger", 1).parquet(dropD)
+      StreamOps.lshPairsSink(src, target, ckpt, compactEvery = 2, tierFanout = 2)
+        .awaitTermination()
+    }
+    def publish(target: String) =
+      StreamOps.lshPairsRead(spark, target).orderBy("id").collect().toSeq
+    def names(target: String) =
+      new java.io.File(target).listFiles().map(_.getName).toSet
+    def path(name: String) = java.nio.file.Paths.get(out, name)
+    stageDocDrops(docs, dropD, n, 0 until 6)
+    runStream(out)
+    assert(names(out).filter(_.startsWith("cdone_")) ==
+      Set("cdone_0_3", "cdone_4_4", "cdone_5_5"))
+    // The layout earlier versions left at compactEvery 2 after batch 5: run
+    // 0-3 plus the live tails of batches 4 and 5 (the same files under the
+    // tail names, no markers) ...
+    for (i <- 4 to 5; f <- Seq("bands", "sigs", "inc"))
+      Files.move(path(s"c${f}_${i}_$i"), path(s"${f}_$i"))
+    Seq("cdone_4_4", "cdone_5_5").foreach(m => Files.delete(path(m)))
+    // ... with an adoption that crashed between its renames (bands_4 is
+    // already run 4-4, no marker yet), a marker-less run a crashed fold
+    // left in the way of tail 5, and replay strays of folded batch 2 that
+    // fail any read.
+    Files.move(path("bands_4"), path("cbands_4_4"))
+    Seq("csigs_5_5", "bands_2", "sigs_2", "inc_2").foreach { d =>
+      Files.createDirectories(path(d))
+      Files.write(path(s"$d/part-00000.parquet"), "not parquet".getBytes)
+    }
+    val copy = s"$dir/copy"
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(out),
+      new java.io.File(copy))
+    // Through the read: publish adopts, equals the one-shot flags, and no
+    // tail name is left.
+    assert(publish(copy) == oneShotLshFlags(
+      docs.filter(pmod(col("doc_id"), lit(n.toLong)) < 6)))
+    assert(names(copy).filter(_.startsWith("cdone_")) ==
+      Set("cdone_0_3", "cdone_4_4", "cdone_5_5"), s"unexpected layout ${names(copy)}")
+    assert(tailNames(copy).isEmpty, s"tail names under $copy")
+    // Through the sink: the next batches adopt, fold 4-5, and publish the
+    // one-shot flags over every batch.
+    stageDocDrops(docs, dropD, n, 6 until n)
+    runStream(out)
+    assert(publish(out) == oneShotLshFlags(docs))
+    assert(names(out).filter(_.startsWith("cdone_")) ==
+      Set("cdone_0_3", "cdone_4_5", "cdone_6_6", "cdone_7_7"),
+      s"unexpected layout ${names(out)}")
+    assert(tailNames(out).isEmpty && !names(out)("csigs_5_5"),
+      s"tails or strays left under $out")
   }
 
   test("drift sink: accumulated count increments reproduce the batch TV " +
