@@ -9,10 +9,11 @@ import graft.functions.MinhashSig
 
 /** MinHash-LSH, the near-duplicate engine behind every banded dedup path
   * (SURVEY.md rows 32, 32b, 31d, 31e, 91, 63): the two hash families,
-  * the `pb` posting key, and the four kernels the consumers compose —
-  * capped band pairs, signature agreement, the index-side bucket cap and
-  * the incremental best-match tail. A change to banding, agreement or
-  * the bucket cap is made here and nowhere else.
+  * the `pb` posting key, and the five kernels the consumers compose —
+  * capped band pairs, a batch's capped pairs against a standing index,
+  * signature agreement, the index-side bucket cap and the incremental
+  * best-match tail. A change to banding, agreement or the bucket cap is
+  * made here and nowhere else.
   *
   * Two families, kept apart until a measurement of both on the same
   * dedup pipeline settles which one stays:
@@ -211,6 +212,39 @@ object MinHashLsh {
     */
   def capBuckets(postings: DataFrame, bucket: Seq[String], maxBucket: Int): DataFrame =
     byOccupancy(postings, bucket, _ <= maxBucket)
+
+  /** Candidate pairs one batch adds to a standing band index. `fresh`
+    * and `old` are (`idCol`, bucket…) postings of the batch and of the
+    * standing corpus (its postings in the batch's buckets suffice). ONE
+    * aggregate over their union, grouped by bucket, counts occupancy and
+    * collects the fresh and the old members; a bucket of at most
+    * `maxBucket` members with at least one fresh member emits fresh×fresh
+    * and fresh×old pairs as distinct (bucket…, id_a, id_b), id_a < id_b.
+    * The cap applies before any pair exists, so an over-full bucket never
+    * expands: a batch emits at most maxBucket² pairs per bucket. Old×old
+    * pairs are the earlier batches' own, so an old-only bucket emits
+    * nothing, and an id on both sides (a re-delivered doc) never pairs
+    * with itself.
+    */
+  def incrementalPairs(fresh: DataFrame, old: DataFrame, idCol: String,
+      bucket: Seq[String], maxBucket: Int): DataFrame = {
+    val keys = bucket.map(col)
+    def side(df: DataFrame, isFresh: Boolean) =
+      df.select(keys :+ col(idCol).as("id") :+ lit(isFresh).as("fresh"): _*)
+    val members = side(fresh, isFresh = true).unionByName(side(old, isFresh = false))
+      .groupBy(keys: _*)
+      .agg(count(lit(1)).as("occ"),
+        collect_list(when(col("fresh"), col("id"))).as("nw"),
+        collect_list(when(!col("fresh"), col("id"))).as("od"))
+      .filter(col("occ") <= maxBucket && size(col("nw")) > 0)
+    def pair(a: Column, b: Column) = struct(a.as("id_a"), b.as("id_b"))
+    val pairs = flatten(transform(col("nw"), x => concat(
+      transform(filter(col("nw"), y => x < y), y => pair(x, y)),
+      transform(filter(col("od"), y => x =!= y), y => pair(least(x, y), greatest(x, y))))))
+    members.select(keys :+ explode(pairs).as("p"): _*)
+      .select(keys :+ col("p.id_a") :+ col("p.id_b"): _*)
+      .distinct()
+  }
 
   /** Incremental best-match tail: candidates (id, corpus_id) scored by
     * estimated Jaccard (agreeing positions / numHashes) between the new

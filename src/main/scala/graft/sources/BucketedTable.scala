@@ -14,15 +14,18 @@ import graft.operators.Transform
   *
   * Layout: `target/kb=<i>/part-*.parquet`, `i = pmod(xxhash64(keys…),
   * numBuckets)` — plain hive partitioning, so `spark.read.parquet
-  * (target)` works everywhere, partition pruning applies to the bucket
-  * column, and the merge's target read is PRUNED to the buckets the
+  * (target)` works everywhere and partition pruning applies to the
+  * bucket column; the merge's target read names only the bucket dirs the
   * batch actually touches. `_graft_buckets.json` in the root pins
   * (numBuckets, keys) at creation; every later merge re-reads it, so a
   * caller can't silently re-bucket half a table.
   *
   * Cost model (the point): a micro-batch with `k` distinct keys touches
   * ≤ min(k, numBuckets) buckets, so the merge reads + rewrites
-  * O(k · |target| / numBuckets) — batch-shaped, not target-shaped. The
+  * O(k · |target| / numBuckets) — batch-shaped, not target-shaped — in
+  * one exchange of ≤ shuffle-width tasks, one file per touched bucket,
+  * and lists O(touched) directories (the root listing the heal pass
+  * makes anyway, then the touched live bucket dirs). The
   * legacy [[graft.streaming.StreamOps.upsertIntoParquet]] full
   * read-merge-swap stays available for small targets; THIS is the shape
   * that survives a 100 TB target (numBuckets sized so a bucket is a few
@@ -51,6 +54,7 @@ object BucketedTable {
   private val OldPrefix = ".old_kb="
   /** The old-copy prefix of tables written before it was hidden. */
   private val LegacyOldPrefix = "_old_kb="
+  private val LiveRx = """kb=(\d+)""".r
 
   /** Bucket id of a key tuple: non-negative, stable across batches and
     * engines that implement xxhash64 (the portability discipline every
@@ -84,20 +88,24 @@ object BucketedTable {
   }
 
   /** Merge one batch into the bucketed target (creating it on first
-    * call), pruned to the batch's buckets. Each branch is one
-    * [[Transform.merge]] of the raw batch, so the semantics are
+    * call), confined to the batch's buckets. One code path: the first
+    * load is a merge into no table. [[Transform.merge]] of the raw batch,
+    * so the semantics are
     * [[graft.streaming.StreamOps.upsertIntoParquet]]'s: within-batch
     * keep-latest by (latestBy desc, tieBreakers asc), `latestBy` protects
     * the target against stale re-deliveries, `stamp` threads the
     * inserted_at/updated_at row stamping through the merge.
     *
-    * Both merges are clustered by kb: kb = f(keys), so all rows of a key
+    * The merge is clustered by kb: kb = f(keys), so all rows of a key
     * share a bucket — a window partitioned by (kb, keys…) groups exactly
     * by keys, and HashPartitioning(kb) already satisfies its
     * ClusteredDistribution; the partitionBy write needs only the
     * kb-prefix of the sort the window ran. ONE exchange per merge, where
     * a keys-hash window plus a kb repartition for the write would be two
-    * full shuffles of the batch.
+    * full shuffles of the batch. Its width is the touched-bucket count,
+    * capped at `spark.sql.shuffle.partitions`: foreachBatch turns AQE off,
+    * so nothing would coalesce a numBuckets-wide exchange of a small
+    * batch.
     */
   def upsert(batch: DataFrame, targetDir: String, keys: Seq[String],
       numBuckets: Int = 256, latestBy: Option[String] = None,
@@ -110,66 +118,61 @@ object BucketedTable {
       s"batch must not carry a '$BucketCol' column (reserved for the layout)")
     val spark = batch.sparkSession
     val (fs, root) = fsRoot(spark, targetDir)
-    heal(fs, root)
-
-    readMeta(fs, root) match {
-      case None =>
-        // First load: the whole batch is the table. Staging + one root
-        // rename — all-or-nothing like the legacy sink's first write.
-        // The meta file is written INTO the staging dir before the
-        // rename, so data and meta become visible in the same atomic
-        // step: a crash can never leave a loaded target without meta
-        // (the old meta-after-rename order had exactly that window, and
-        // the next upsert's None branch would have read it as "no
-        // table" and wiped it).
-        val init = Transform.merge(None,
-          Seq(batch.withColumn(BucketCol, bucketOf(keys, numBuckets))), keys,
-          latestBy, tieBreakers, stamp, clusterBy = Some((BucketCol, numBuckets)))
-        val staging = new Path(targetDir + ".staging")
-        fs.delete(staging, true)
-        writePreBucketed(init, staging.toString, maxRecordsPerFile)
-        writeMeta(fs, staging, numBuckets, keys)
-        if (fs.exists(root)) {
-          // Meta-less non-empty root: NOT ours to destroy — either a
-          // foreign dataset the caller mistyped, or (pre-atomic-meta
-          // layouts) a crash artifact. Refuse loudly instead of
-          // silently treating it as a fresh first load.
-          if (fs.listStatus(root).nonEmpty)
-            throw new java.io.IOException(
-              s"BucketedTable: target $targetDir exists non-empty without " +
-                s"$MetaFile — refusing to overwrite; delete it explicitly " +
-                "or restore the meta file")
-          Swap.drop(fs, root)
-        }
-        Swap.move(fs, staging, root)
-
+    val live = heal(fs, root)
+    val stored = readMeta(fs, root)
+    val n = stored match {
       case Some((n, storedKeys)) =>
         require(storedKeys == keys,
           s"bucketed target $targetDir was created with keys $storedKeys, " +
             s"merge called with $keys")
-        // The batch is micro-batch-sized: materialize it once (it feeds
-        // the touched-bucket collect AND the merge union). RAW batch —
-        // the merge window picks each key's winner within it too.
-        val bk = graft.operators.Materialize(
-          batch.withColumn(BucketCol, bucketOf(keys, n)))
-        val touched = bk.select(BucketCol).distinct()
-          .collect().map(_.getInt(0)).sorted
-        if (touched.nonEmpty) {
-          // Partition-PRUNED target read: the In over ≤ numBuckets int
-          // literals is planning-cheap (the 65k-literal lesson applies
-          // to corpus-sized sets, not bucket counts). kb is KEPT on both
-          // sides: the merge clusters by it, and the write below reuses
-          // that layout as-is.
-          val tgt = spark.read.parquet(targetDir)
-            .filter(col(BucketCol).isin(touched.map(Int.box).toIndexedSeq: _*))
-          val merged = Transform.merge(Some(tgt), Seq(bk), keys, latestBy,
-            tieBreakers, stamp, clusterBy = Some((BucketCol, touched.length)))
-          val staging = new Path(targetDir + ".staging")
-          fs.delete(staging, true)
-          writePreBucketed(merged, staging.toString, maxRecordsPerFile)
-          touched.foreach(k => swapBucket(fs, root, staging, k))
-          fs.delete(staging, true)
-        }
+        n
+      case None =>
+        // Meta-less non-empty root: NOT ours to destroy — either a
+        // foreign dataset the caller mistyped, or (pre-atomic-meta
+        // layouts) a crash artifact. Refuse loudly instead of silently
+        // treating it as a fresh first load.
+        if (fs.exists(root) && fs.listStatus(root).nonEmpty)
+          throw new java.io.IOException(
+            s"BucketedTable: target $targetDir exists non-empty without " +
+              s"$MetaFile — refusing to overwrite; delete it explicitly " +
+              "or restore the meta file")
+        numBuckets
+    }
+    // The batch is micro-batch-sized: materialize it once (it feeds the
+    // touched-bucket collect AND the merge). RAW batch — the merge window
+    // picks each key's winner within it too.
+    val bk = graft.operators.Materialize(
+      batch.withColumn(BucketCol, bucketOf(keys, n)))
+    val touched = bk.select(BucketCol).distinct()
+      .collect().map(_.getInt(0)).sorted
+    // A first load commits even an empty batch: the table then exists.
+    if (touched.isEmpty && stored.nonEmpty) return
+    // The target read covers the touched buckets that exist, listed by
+    // the heal pass, so an untouched bucket is never listed; basePath
+    // keeps kb inferred from the directory names. kb is KEPT on both
+    // sides: the merge clusters by it, and the write reuses that layout.
+    val liveTouched = touched.filter(live).map(k => new Path(root, s"kb=$k").toString)
+    val tgt = if (liveTouched.isEmpty) None
+      else Some(spark.read.option("basePath", targetDir).parquet(liveTouched.toIndexedSeq: _*))
+    val width = math.max(1, math.min(touched.length,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    val merged = Transform.merge(tgt, Seq(bk), keys, latestBy, tieBreakers,
+      stamp, clusterBy = Some((BucketCol, width)))
+    val staging = new Path(targetDir + ".staging")
+    fs.delete(staging, true)
+    writePreBucketed(merged, staging.toString, maxRecordsPerFile)
+    if (stored.isEmpty) {
+      // First load: staging + one root rename, all-or-nothing. The meta
+      // file is written INTO the staging dir before the rename, so data
+      // and meta become visible in the same atomic step: a crash can
+      // never leave a loaded target without meta (which the next upsert
+      // would refuse as a foreign dataset).
+      writeMeta(fs, staging, n, keys)
+      if (fs.exists(root)) Swap.drop(fs, root)
+      Swap.move(fs, staging, root)
+    } else {
+      touched.foreach(k => swapBucket(fs, root, staging, k))
+      fs.delete(staging, true)
     }
     // Spark's own writers invalidate cached plans/listings for their
     // output path; our FS-level renames bypass that, so a caller-held
@@ -183,14 +186,15 @@ object BucketedTable {
     * copy whose live `kb=i` is missing is the pre-swap data (restore it);
     * one whose live dir exists is a completed swap's leftover (drop it).
     * Recognises the `_old_kb=i` name of tables written before the old
-    * copy was hidden. One listing of the root when nothing needs healing.
+    * copy was hidden. One listing of the root when nothing needs healing;
+    * returns the live bucket ids after the heal.
     */
-  def heal(fs: FileSystem, root: Path): Unit = {
-    if (!fs.exists(root)) return
-    fs.listStatus(root).foreach { s =>
-      if (s.isDirectory) liveOf(s.getPath.getName)
-        .foreach(live => Swap.heal(fs, new Path(root, live), s.getPath))
-    }
+  def heal(fs: FileSystem, root: Path): Set[Int] = {
+    if (!fs.exists(root)) return Set.empty
+    fs.listStatus(root).filter(_.isDirectory).map { s =>
+      val name = s.getPath.getName
+      liveOf(name).fold(name) { live => Swap.heal(fs, new Path(root, live), s.getPath); live }
+    }.collect { case LiveRx(k) => k.toInt }.toSet
   }
 
   /** The live bucket dir an old-copy name stands for. */
@@ -199,10 +203,11 @@ object BucketedTable {
       .map(p => "kb=" + name.stripPrefix(p))
 
   // The frame arrives already hash-partitioned on kb (the fused window's
-  // explicit repartition — one task per bucket, contiguous files per
-  // bucket dir) and kb-prefix-sorted, so the partitionBy write inserts
-  // neither an exchange nor a sort; maxRecordsPerFile splits the
-  // occasional oversize bucket.
+  // explicit repartition, at most shuffle-width tasks) and kb-prefix-
+  // sorted, so the partitionBy write inserts neither an exchange nor a
+  // sort: a task writes its buckets one after another, one file per
+  // touched bucket; maxRecordsPerFile splits the occasional oversize
+  // bucket.
   private def writePreBucketed(df: DataFrame, dir: String,
       maxRecordsPerFile: Long): Unit =
     df.write.option("maxRecordsPerFile", maxRecordsPerFile)

@@ -237,11 +237,14 @@ object StreamOps {
     *
     * `buckets = Some(n)` switches the target to the key-hash-bucketed
     * layout ([[graft.sources.BucketedTable]]) and makes each merge
-    * BATCH-cost: only the buckets the batch touches are read and
+    * BATCH-cost: only the buckets the batch touches are listed, read and
     * rewritten, O(batchKeys · target/n) per micro-batch instead of the
     * legacy full read-merge-swap's O(|target|) — the shape that
-    * survives a 100 TB target. Read the bucketed result through
-    * `BucketedTable.read` (or ignore the extra `kb` partition column).
+    * survives a 100 TB target. Every batch, the first included, is one
+    * exchange of at most `spark.sql.shuffle.partitions` tasks (Spark runs
+    * foreachBatch without AQE, so nothing would coalesce an n-wide one).
+    * Read the bucketed result through `BucketedTable.read` (or ignore
+    * the extra `kb` partition column).
     */
   def upsertSink(
       df: DataFrame,
@@ -844,8 +847,11 @@ object StreamOps {
     * occupancy only grows — the publish step ([[lshPairsRead]]) applies
     * the cap against FINAL occupancy, exactly the batch twin's
     * `HAVING COUNT(*) BETWEEN 2 AND maxBucket`, and drops those pairs
-    * either way. In-flight emission is therefore bounded by
-    * maxBucket² per bucket lifetime, never duplicate-family².
+    * either way. The pair step ([[MinHashLsh.incrementalPairs]]) is one
+    * aggregate over the batch's and the pruned standing postings that
+    * applies the cap before any pair is generated, so in-flight emission
+    * is bounded by maxBucket² per bucket lifetime, never
+    * duplicate-family², in the plan as well as in the output.
     *
     * ONE ROOT KIND: the index is a set of marker-gated runs and nothing
     * else; the probe, the merges and the publish read visible runs only.
@@ -871,11 +877,15 @@ object StreamOps {
     *  4. check the one missing-snapshot rule: the visible runs starting
     *     before `b` tile [0, hi] from 0 with hi ≥ b-1, else the target
     *     was lost ("wipe the checkpoint and replay" — not a cold start);
-    *  5. probe those runs, `src_batch < b` — a no-op in forward progress,
-    *     the exact prior corpus when a batch whose run is already merged
-    *     replays (its rewritten run is contained, so invisible, and swept
-    *     by the next batch);
-    *  6. write its one-batch run ([[writeRun]], marker last).
+    *  5. hash the batch once (signatures are a local checkpoint; band
+    *     postings a narrow projection of them) and probe those runs for
+    *     the batch's `pb` values, `src_batch < b` — a no-op in forward
+    *     progress, the exact prior corpus when a batch whose run is
+    *     already merged replays (its rewritten run is contained, so
+    *     invisible, and swept by the next batch);
+    *  6. one aggregate over new ∪ probed postings per bucket: capped
+    *     occupancy, then new×new and new×old pairs;
+    *  7. write its one-batch run ([[writeRun]], marker last).
     *
     * Every write is an overwrite of a named run dir with the marker last,
     * and every reader is gated on markers: a half-written run is
@@ -918,10 +928,11 @@ object StreamOps {
             s"lshPairsSink: runs ${prior.mkString(" ")} under $targetDir do " +
               s"not cover batches 0..${batchId - 1} at batch $batchId — wipe " +
               "the checkpoint and replay")
-        // Already a local checkpoint: the batch is hashed once.
+        // Already a local checkpoint: the batch is hashed once. The band
+        // postings stay a narrow projection of it, exploded per consumer.
         val sigs = MinHashLsh.portableMinhashSig(batch)
-        val bands = graft.operators.Materialize(MinHashLsh.portableBands(sigs)
-          .withColumn("pb", MinHashLsh.pb(col("b"), col("k1"), keyBuckets)))
+        val bands = MinHashLsh.portableBands(sigs)
+          .withColumn("pb", MinHashLsh.pb(col("b"), col("k1"), keyBuckets))
         // Standing-corpus postings, pruned to the batch's own band keys
         // (≤ numBands·keyBuckets distinct pb values, collected as static
         // literals; each run's row groups prune independently). The
@@ -934,23 +945,8 @@ object StreamOps {
           .filter(col("pb").isin(pbs.map(Int.box): _*))
           .filter(col("src_batch") < batchId)
           .select("doc_id", "b", "k1", "k2")
-        val bn = bands.select("doc_id", "b", "k1", "k2")
-        val occOk = bn.unionByName(old)
-          .groupBy(bkt.map(col): _*).agg(count(lit(1)).as("occ"))
-          .filter(col("occ") <= maxBucket)
-          .select(bkt.map(col): _*)
-        val nn = bn.toDF("id_a", "b", "k1", "k2")
-          .join(bn.toDF("id_b", "b", "k1", "k2"), bkt)
-          .filter(col("id_a") < col("id_b"))
-        val no = bn.toDF("id_x", "b", "k1", "k2")
-          .join(old.toDF("id_y", "b", "k1", "k2"), bkt)
-          .select(col("b"), col("k1"), col("k2"),
-            least(col("id_x"), col("id_y")).as("id_a"),
-            greatest(col("id_x"), col("id_y")).as("id_b"))
-        val pairs = nn.select(col("b"), col("k1"), col("k2"), col("id_a"), col("id_b"))
-          .unionByName(no)
-          .join(occOk, bkt)
-          .distinct()
+        val pairs = MinHashLsh.incrementalPairs(
+          bands.select("doc_id", "b", "k1", "k2"), old, "doc_id", bkt, maxBucket)
         writeRun(fs, targetDir, batchId, batchId, bands, sigs, pairs)
         ()
       }

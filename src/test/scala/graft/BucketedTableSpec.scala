@@ -1,10 +1,20 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.BucketedTable
@@ -24,6 +34,70 @@ class BucketedTableSpec extends AnyFunSuite {
 
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
+
+  /** The physical plans of the file writes `body` runs. Both listeners
+    * sit on the one ordered listener queue, so once the drain job's start
+    * is delivered, every write `body` made has been too.
+    */
+  private def writePlans(body: => Unit): Seq[SparkPlan] = {
+    val sc = spark.sparkContext
+    val drain = s"bt-drain-${java.util.UUID.randomUUID()}"
+    val drained = new CountDownLatch(1)
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id")).contains(drain))
+          drained.countDown()
+    }
+    val writes = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.logical.exists(_.isInstanceOf[InsertIntoHadoopFsRelationCommand]))
+          plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    sc.addSparkListener(jobs)
+    spark.listenerManager.register(writes)
+    try {
+      body
+      sc.setJobGroup(drain, "drain")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(jobs)
+      spark.listenerManager.unregister(writes)
+    }
+    plans.asScala.toSeq
+  }
+
+  /** Every operator of a physical plan, through adaptive wrappers. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case _ => p +: p.children.flatMap(nodes)
+  }
+
+  /** (exchange widths on kb, scan root dir names) of one upsert's write. */
+  private def mergeShape(body: => Unit): (Seq[Int], Seq[Set[String]]) = {
+    val plans = writePlans(body)
+    assert(plans.size == 1, s"expected one write, got ${plans.size}")
+    val ns = nodes(plans.head)
+    val widths = ns.collect { case e: ShuffleExchangeExec => e.outputPartitioning }.map {
+      case h: HashPartitioning if h.references.map(_.name).toSet == Set(BucketedTable.BucketCol) =>
+        h.numPartitions
+      case SinglePartition => 1 // how Spark plans a one-partition repartition
+      case other => fail(s"unexpected exchange $other")
+    }
+    val roots = ns.collect { case f: FileSourceScanExec =>
+      f.relation.location.rootPaths.map(_.getName).toSet }
+    (widths, roots)
+  }
+
+  /** Parquet files per bucket dir of a table. */
+  private def filesPerBucket(bt: String): Map[String, Int] =
+    new java.io.File(bt).listFiles().filter(_.getName.startsWith("kb=")).map { d =>
+      d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))
+    }.toMap
 
   test("bucketed upsert == full-table upsert over the same batch sequence") {
     val bt = tmp("eq-b"); val full = tmp("eq-f")
@@ -260,5 +334,50 @@ class BucketedTableSpec extends AnyFunSuite {
     assert(out.filter(col("k") < 25 && col("v") === 1).count() == 25)
     assert(out.filter(col("k") >= 25 && col("v") === 2).count() == 50)
     assert(BucketedTable.meta(spark, target).contains((16, Seq("k"))))
+  }
+
+  test("first load and merge: one kb exchange of min(touched, shuffle width) " +
+      "tasks, one file per touched bucket; the merge scans only live touched buckets") {
+    val bt = tmp("plan")
+    val shuffleWidth = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val bucket = Seq.tabulate(200)(_.toLong).toDF("k")
+      .select(col("k"), BucketedTable.bucketOf(Seq("k"), 64))
+      .as[(Long, Int)].collect().toMap
+    // First load: more touched buckets than the shuffle width, no scan.
+    val b1 = Seq.tabulate(12)(i => (i.toLong, 1L)).toDF("k", "v")
+    val touched1 = (0L until 12L).map(bucket).toSet
+    assert(touched1.size > shuffleWidth)
+    val (w1, roots1) = mergeShape(BucketedTable.upsert(b1, bt, Seq("k"), numBuckets = 64))
+    assert(w1 == Seq(shuffleWidth) && roots1.isEmpty, s"first load: $w1 $roots1")
+    assert(filesPerBucket(bt) == touched1.map(k => s"kb=$k" -> 1).toMap)
+    // Merge: one key in a live bucket, one in a bucket the load left empty.
+    val fresh = (12L until 200L).find(k => !touched1(bucket(k))).get
+    val (w2, roots2) = mergeShape(BucketedTable.upsert(
+      Seq((3L, 2L), (fresh, 2L)).toDF("k", "v"), bt, Seq("k"), numBuckets = 64))
+    assert(w2 == Seq(2), s"merge exchanges $w2 for 2 touched buckets")
+    assert(roots2 == Seq(Set(s"kb=${bucket(3L)}")), s"merge scanned $roots2")
+    assert(filesPerBucket(bt).values.forall(_ == 1))
+    // A merge whose buckets are all new reads no target at all.
+    val live = touched1 + bucket(fresh)
+    val novel = (12L until 200L).find(k => !live(bucket(k))).get
+    val (w3, roots3) = mergeShape(
+      BucketedTable.upsert(Seq((novel, 3L)).toDF("k", "v"), bt, Seq("k"), numBuckets = 64))
+    assert(w3 == Seq(1) && roots3.isEmpty, s"all-new merge: $w3 $roots3")
+    val out = BucketedTable.read(spark, bt).as[(Long, Long)].collect().toMap
+    assert(out.size == 14 && out(3L) == 2L && out(fresh) == 2L && out(novel) == 3L &&
+      out(4L) == 1L)
+  }
+
+  test("an empty first batch lands the meta atomically; the next batch merges into it") {
+    val bt = tmp("empty")
+    val empty = spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL("k LONG, v STRING"))
+    BucketedTable.upsert(empty, bt, Seq("k"), numBuckets = 4)
+    assert(BucketedTable.meta(spark, bt).contains((4, Seq("k"))))
+    assert(!new java.io.File(bt + ".staging").exists(), "staging dir must be gone")
+    assert(filesPerBucket(bt).isEmpty)
+    BucketedTable.upsert(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), bt, Seq("k"),
+      numBuckets = 4)
+    assert(sortedRows(BucketedTable.read(spark, bt)) == Seq("[1,a]", "[2,b]"))
   }
 }

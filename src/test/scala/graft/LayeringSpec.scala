@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Runner orchestrator must not refer to `graft.queries` (operator code
   * lives in `operators/`; `queries/` only wires it to tables). And the
   * only entry points are the board, the oracle run and the operator
-  * tools: no dev-probe main.
+  * tools: no dev-probe main, and no round-numbered probe script.
   */
 class LayeringSpec extends AnyFunSuite {
 
@@ -51,5 +51,13 @@ class LayeringSpec extends AnyFunSuite {
     }
     assert(mains.sorted == Seq("Bench", "PlanDump", "RunOne", "ScaleGen", "Verify"),
       s"objects with def main: ${mains.sorted.mkString(", ")}")
+  }
+
+  test("tools/ holds no round-numbered probe_r<N> script") {
+    val s = Files.list(Paths.get("tools"))
+    val probes = try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.matches("""probe_r\d.*""")).toList.sorted
+    finally s.close()
+    assert(probes.isEmpty, s"round-specific probe scripts in tools/: ${probes.mkString(", ")}")
   }
 }

@@ -494,13 +494,13 @@ class StreamingSpec extends AnyFunSuite {
       docs: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] =
     oneShotLshFrame(docs).orderBy("id").collect().toSeq
 
-  private def oneShotLshFrame(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private def oneShotLshFrame(docs: org.apache.spark.sql.DataFrame,
+      maxBucket: Int = 100): org.apache.spark.sql.DataFrame = {
     val sig = graft.operators.MinHashLsh.portableMinhashSig(docs)
     val bands = graft.operators.MinHashLsh.portableBands(sig)
     val capped = bands.join(
       bands.groupBy("b", "k1", "k2").agg(count(lit(1)).as("occ"))
-        .filter(col("occ") > 1 && col("occ") <= 100).select("b", "k1", "k2"),
+        .filter(col("occ") > 1 && col("occ") <= maxBucket).select("b", "k1", "k2"),
       Seq("b", "k1", "k2"))
     val pk = lit(10000000000L)
     capped.toDF("b", "k1", "k2", "id_a")
@@ -519,6 +519,50 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("id"), col("n_matches"),
         pmod(col("best"), pk).as("best_match"),
         expr("best DIV 10000000000").as("best_n_eq"))
+  }
+
+  test("LSH gate at a small cap: a bucket crossing the cap at a batch " +
+      "boundary and an in-batch bucket over it publish as the one-shot twin, " +
+      "and no run holds a pair of an over-full bucket") {
+    val dir = Files.createTempDirectory("graft-lshcap").toString
+    val out = s"$dir/out"; val dropD = s"$dir/drop"
+    val cap = 3
+    // Identical-text families share every band bucket. Even ids land in
+    // batch 0, odd ids in batch 1: A is 5 copies in batch 0; B is 2 + 2
+    // (occupancy 2, then 4); C is 2 + 1 (occupancy exactly the cap).
+    val a = (0L to 8L by 2).map(1000000L + _)
+    val b = Seq(1000010L, 1000012L, 1000011L, 1000013L)
+    val c = Seq(1000020L, 1000022L, 1000021L)
+    val fams = a.map(_ -> "amber basalt cobalt dune ember") ++
+      b.map(_ -> "fjord glacier harbor inlet jetty") ++
+      c.map(_ -> "kelp lagoon marsh nook oasis")
+    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
+      .unionByName(fams.toDF("doc_id", "text"))
+    stageDocDrops(docs, dropD, 2, 0 until 2)
+    StreamOps.lshPairsSink(spark.readStream.schema("doc_id LONG, text STRING")
+        .option("maxFilesPerTrigger", 1).parquet(dropD), out, s"$dir/ckpt",
+        maxBucket = cap)
+      .awaitTermination()
+    val got = StreamOps.lshPairsRead(spark, out, maxBucket = cap)
+      .orderBy("id").collect().toSeq
+    assert(got == oneShotLshFrame(docs, cap).orderBy("id").collect().toSeq)
+    val matches = got.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(matches.get(1000021L).contains(1L) && matches.get(1000022L).contains(2L),
+      s"family C at the cap must publish: $matches")
+    assert(!(a ++ b).exists(matches.contains), s"an over-full family published: $matches")
+    // In flight: batch 0 paired B while its buckets held 2; batch 1 found
+    // them over the cap and generated nothing for them, and no batch ever
+    // generated a pair of A. A batch emits at most C(cap, 2) per bucket.
+    def inc(run: String) = spark.read.parquet(s"$out/cinc_$run")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(ids(inc("0_0")).contains((1000010L, 1000012L)))
+    assert(!ids(inc("0_0").unionByName(inc("1_1"))).exists { case (x, y) =>
+      a.contains(x) || a.contains(y) || Set(1000011L, 1000013L)(y) })
+    Seq("0_0", "1_1").foreach { run =>
+      val most = inc(run).groupBy("b", "k1", "k2").count().agg(max("count")).head().getLong(0)
+      assert(most <= cap * (cap - 1) / 2, s"run $run holds $most pairs in one bucket")
+    }
   }
 
   test("LSH gate folding: probe reads a constant-bounded root count at N " +
