@@ -4,7 +4,9 @@ package graft
   * prints ONE machine-parseable JSON line (the driver keeps only a
   * short tail of the output — the final line stays compact: headline
   * queries only, ms precision; the full per-query map goes on its own
-  * `BENCH_DETAIL` line above it for humans).
+  * `BENCH_DETAIL` line above it for humans). A query that throws keeps
+  * its time on both lines; the `BENCH_FAILED` line maps it to its
+  * exception class and the final line counts it in `n_failed`.
   */
 object Bench {
 
@@ -81,9 +83,11 @@ object Bench {
         try fn(spark, sfDir).count() catch { case _: Throwable => () }
         reset()
       }
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = selected.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try fn(spark, sfDir).count()
+      catch { case e: Throwable => failed(name) = e.getClass.getName }
       val dt = (System.nanoTime() - t0) / 1e9
       reset()
       name -> dt
@@ -96,6 +100,8 @@ object Bench {
       m.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     println("BENCH_DETAIL " + jmap(results))
+    println("BENCH_FAILED " + failed.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
+      .mkString("{", ",", "}"))
     val head = headline.flatMap(k => results.get(k).map(k -> _))
     // Ambient controls: untouched TPC-H shapes whose times move only
     // with the host, never with graft changes — embedded in every board
@@ -108,7 +114,7 @@ object Bench {
     // chars, so a full 100+-query map gets its front truncated and fails
     // to parse (rounds 1-2 shipped "parsed": null because of this).
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"controls":${jmap(controls)},"queries":${jmap(head)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"controls":${jmap(controls)},"queries":${jmap(head)},"sf":"$sfDir"}"""
     println(line)
     // Also persisted to a file so the result never depends on how much
     // of stdout the harness keeps.

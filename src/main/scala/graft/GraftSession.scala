@@ -2,12 +2,28 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.LocalFs
+
 /** One-call session factory with graft's recommended configuration —
   * the adoption entry point for a user switching from the reference
   * pipeline: SQL extensions registered (strip_accents/uuid5/shingles/
   * minhash_sig/simhash/vec_dot), AQE on (with skew-join handling),
-  * UTC session timezone (cross-engine timestamp parity), and
-  * nanosecond-parquet compatibility for event feeds.
+  * UTC session timezone (cross-engine timestamp parity),
+  * nanosecond-parquet compatibility for event feeds, and a fork-free
+  * local file system.
+  *
+  * The local file system: without `libhadoop`, which Spark's
+  * distribution does not ship, Hadoop's stock `file:` bindings fork a
+  * `chmod` process for every file created and directory made (output
+  * files, `.crc` checksums, `_SUCCESS` markers, run and bucket dirs) and
+  * a `readlink` process for every FileContext rename (each streaming
+  * offset and commit log entry). [[LocalFs]] binds both `fs.file.impl`
+  * and `fs.AbstractFileSystem.file.impl` to classes that set the same
+  * mode bits through `java.nio`, unless the caller already set either
+  * key as a system property. Per call (200 calls, 3 rounds, JDK 17,
+  * Hadoop 3.4.2, 4-core shared host): a checksummed create took
+  * 11.5-13.7 ms stock and 0.2-0.7 ms bound (a plain Java create:
+  * 0.03-0.05 ms); a `mkdirs` 5.1-6.0 ms stock and 0.06-0.12 ms bound.
   *
   * `shufflePartitions` should track the deployment: cores on a laptop,
   * ~2-3× total executor cores (or data-volume-derived) on a cluster —
@@ -16,7 +32,7 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   def builder(master: String = "", shufflePartitions: Int = 0): SparkSession.Builder = {
-    var b = SparkSession.builder()
+    var b = LocalFs.install(SparkSession.builder())
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // tz-naive parquet (pandas/pyarrow writers) reads as an instant under

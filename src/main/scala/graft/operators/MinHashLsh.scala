@@ -195,6 +195,15 @@ object MinHashLsh {
     * pairwise candidates grow with the square of a bucket's occupancy,
     * and a bucket at the cap carries no discrimination. Without it
     * every bucket pairs (a caller whose input is already bounded).
+    *
+    * A join, not one aggregate as in [[incrementalPairs]], which emits
+    * the same capped pair set when its `old` side is empty. Measured on
+    * `dedup_corpus` (traced, seed 601): a one-aggregate form (collect_list
+    * per bucket, cap, explode) emitted the same 1173 candidates but
+    * doubled `dedup.candidates.exec_cpu_s` (3.88 → 7.75 s) and raised its
+    * shuffle from 4.6 to 5.8 MB. Most postings sit in over-cap buckets,
+    * which the aggregate must collect before it can drop them; the
+    * occupancy join drops them first.
     */
   def bandPairs(postings: DataFrame, idCol: String, bucket: Seq[String],
       maxBucket: Option[Int]): DataFrame = {

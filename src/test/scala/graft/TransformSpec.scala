@@ -7,9 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.config._
 import graft.functions.{normText, stripAccents, uuid5, normColname}
 import graft.operators.{Transform, TransformHardFail}
+import graft.sources.LocalFs
 
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
+  // The shipped local file system, so every test's writes, swaps and
+  // checkpoints run through it.
+  lazy val spark: SparkSession = LocalFs.install(SparkSession.builder())
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")

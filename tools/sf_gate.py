@@ -16,6 +16,9 @@ flagged when new > factor * prior AND new - prior > abs_floor (default
 2 s — sub-second queries bounce multiples on host noise; see SURVEY §7's
 variance note). Exit code 1 when anything is flagged, so a round cannot
 close on a silent sf1 regression without an explanation row in SURVEY.
+A board with failed queries (Bench's BENCH_FAILED line, or n_failed on
+its final line) also exits 1: a query that throws is timed like any
+other, so its row alone does not show the failure.
 
 --floors floors.json adds a per-query STEADY-STATE floor map (RunOne-
 isolated seconds, e.g. tools/floors_sf10.json): a query whose new time
@@ -75,6 +78,18 @@ def load_queries(path):
     return d
 
 
+def load_failures(path):
+    """A board's failed queries as printable rows: the BENCH_FAILED map
+    (name -> exception class) of a Bench log, else the n_failed count of
+    a Bench final line (bench.json), which names none."""
+    text = open(path, encoding="utf-8").read()
+    m = re.findall(r"BENCH_FAILED (\{.*\})", text)
+    if m:
+        return [f"{k}: {v}" for k, v in json.loads(m[-1]).items()]
+    m = re.findall(r'"n_failed":\s*(\d+)', text)
+    return [f"{m[-1]} queries (n_failed)"] if m and int(m[-1]) else []
+
+
 def main():
     # Accept both --opt=value and --opt value.
     args, opts = [], {}
@@ -105,6 +120,7 @@ def main():
     new_path, prior_path = args[0], args[1]
     new = load_queries(new_path)
     prior = load_queries(prior_path)
+    failures = [(p, f) for p in (new_path, prior_path) for f in load_failures(p)]
 
     def median(xs):
         xs = sorted(xs)
@@ -194,11 +210,16 @@ def main():
     kept = [n for n in new if n in prior and not n.startswith("_")]
     print(f"== {len(kept)} compared, {len(flagged)} flagged, "
           f"{len(excused)} excused by floors, {len(missing)} without prior ==")
+    for path, f in failures:
+        print(f"FAIL  {path}: {f}")
+    if failures:
+        print("== exit 1: a board with failed queries is not a timing "
+              "board ==")
     if suspect_drift:
         print("== exit 1: drift outside the ambient band / control "
               "regression — adjudicate the controls before accepting "
               "this board ==")
-    sys.exit(1 if flagged or suspect_drift else 0)
+    sys.exit(1 if flagged or suspect_drift or failures else 0)
 
 
 if __name__ == "__main__":
