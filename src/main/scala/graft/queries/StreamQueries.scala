@@ -352,8 +352,8 @@ object StreamQueries {
     // two parquet drops stream through a REAL readStream +
     // StreamOps.rangeCountSink: each micro-batch runs the order-
     // statistics countInInterval against the STATIC signup-window frame
-    // and lands its per-interval counts in a batchId-keyed increment
-    // file; the publish step sums increments. Because interval counts
+    // and lands its per-interval counts as its one-batch run in the
+    // sinks' run store; the publish step sums the visible runs. Because interval counts
     // are distributive over any split of the points, the accumulated
     // output equals ONE batch q_range_join over all clicks — so the
     // oracle IS q_range_join's SQL: the stream must reproduce the batch
@@ -608,9 +608,9 @@ object StreamQueries {
     // ------------------------------------------------------------------
     // Streaming corpus-drift gate (ORACLED): documents stream in two
     // doc_id-split drops; each micro-batch lands its (source, tok)
-    // occurrence counts as a batchId-keyed increment
+    // occurrence counts as its one-batch run in the run store
     // (StreamOps.distDriftSink — idempotent under at-least-once
-    // replay), and publish re-aggregates the increments through the
+    // replay), and publish re-aggregates the visible runs through the
     // SHARED TextStats.tvDrift — the same code the batch x_dist_drift
     // runs, so the oracle is its SQL verbatim. Token counts are
     // distributive over any document split: stateless,

@@ -53,6 +53,16 @@ class LayeringSpec extends AnyFunSuite {
       s"objects with def main: ${mains.sorted.mkString(", ")}")
   }
 
+  test("streaming sinks discover, commit and sweep their targets only " +
+      "through the run store") {
+    // Code lines only: the scaladocs may name the layout they describe.
+    val code = Files.readAllLines(root.resolve("streaming/StreamOps.scala")).asScala
+      .map(_.trim).filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/*"))
+    val managed = """.*\b(c?(done|bands|sigs|inc)|batch|state)_.*""".r
+    val offenders = code.filter(l => l.contains("listStatus") || managed.matches(l))
+    assert(offenders.isEmpty, s"StreamOps lists or names run-store paths: ${offenders.mkString("; ")}")
+  }
+
   test("tools/ holds no round-numbered probe_r<N> script") {
     val s = Files.list(Paths.get("tools"))
     val probes = try s.iterator().asScala.map(_.getFileName.toString)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Tables
-import graft.streaming.StreamOps
+import graft.streaming.{RunStore, StreamOps}
 
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -579,13 +579,13 @@ class StreamingSpec extends AnyFunSuite {
       StreamOps.lshPairsSink(src, out, ckpt, compactEvery = compactEvery)
         .awaitTermination()
     }
-    StreamOps.lshProbeRoots.remove(out)
+    RunStore.probeRoots.remove(out)
     runStream(s"$dir/ckpt1")
     // THE compaction contract: the probe never reads more than
     // compactEvery roots here (L0 runs + < compactEvery one-batch runs; no
     // tier merge fires below tierFanout runs), however many batches the
     // stream has seen — vs O(batchId) before.
-    val rootCounts = StreamOps.lshProbeRoots(out).map(_._2)
+    val rootCounts = RunStore.probeRoots(out).map(_._2)
     assert(rootCounts.size == n && rootCounts.max <= compactEvery,
       s"probe root counts $rootCounts exceed compactEvery=$compactEvery")
     // Layout after L0 folds at batch 3 (run 0..2) and 6 (run 3..5), then
@@ -627,13 +627,13 @@ class StreamingSpec extends AnyFunSuite {
         compactEvery = compactEvery, tierFanout = fanout)
         .awaitTermination()
     }
-    StreamOps.lshProbeRoots.remove(out)
-    StreamOps.lshFoldSpans.remove(out)
+    RunStore.probeRoots.remove(out)
+    RunStore.foldSpans.remove(out)
     runStream(s"$dir/ckpt1")
     // (a) Per-batch probe roots: visible runs mirror the base-fanout
     // digit count of the fold counter — ≤ (fanout-1)·log_f(N) + tails,
     // NEVER O(batchId).
-    val rootCounts = StreamOps.lshProbeRoots(out).map(_._2)
+    val rootCounts = RunStore.probeRoots(out).map(_._2)
     val logBound = (fanout - 1) *
       math.ceil(math.log(n.toDouble) / math.log(fanout)).toInt + compactEvery
     assert(rootCounts.size == n && rootCounts.max <= logBound,
@@ -644,7 +644,7 @@ class StreamingSpec extends AnyFunSuite {
     // so the sum is ≤ N·(log_f(N)+1) — here 74 counted vs 276 for the r14
     // full-generation rewrite (Σ k over 23 folds). The quadratic shape
     // would trip this bound from N≈16 on.
-    val spans = StreamOps.lshFoldSpans(out)
+    val spans = RunStore.foldSpans(out)
     val nlogn = n.toLong *
       (math.ceil(math.log(n.toDouble) / math.log(fanout)).toLong + 1)
     val quadratic = (1 until n).map(_.toLong).sum * compactEvery
